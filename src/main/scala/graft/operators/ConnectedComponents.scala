@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -68,28 +69,52 @@ object ConnectedComponents {
     * (a, b); self-loops and duplicates are tolerated.
     */
   def components(edges: DataFrame): DataFrame = {
-    // orient (big, small), drop self-loops, dedup — the invariant
-    // every round preserves
+    val nodes = edges.select(col("a").as("node"))
+      .unionAll(edges.select(col("b").as("node")))
+      .distinct() // read once at the end — plain lineage is fine
+    keyComponents(nodes, edges)
+  }
+
+  /** The contraction's fixed point as a checkpointed star forest
+    * (a: node, b: component min) — one row per node that is NOT its
+    * own component min. Input columns (a, b); self-loops and
+    * duplicates are tolerated.
+    */
+  private def forest(edges: DataFrame): DataFrame = {
+    // orient (big, small) and drop self-loops — the invariant every
+    // round preserves. No dedup here: round 1's sorted-run walk skips
+    // equal adjacent pairs, so duplicates die in its first shuffle.
+    // The RDD-level checkpoint materializes in the same job that
+    // counts the pairs for partition sizing.
     val first = edges
       .select(greatest(col("a"), col("b")).cast("long").as("a"),
         least(col("a"), col("b")).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val nodes = edges.select(col("a").as("node"))
-      .unionAll(edges.select(col("b").as("node")))
-      .distinct() // read once at the end — plain lineage is fine
-    val nEdges = first.count()
-
-    val fixedPoint = bigLoop(first, nEdges)
-
-    // fixed point: the star forest (node → component min); nodes with
-    // no entry (component minima, isolated nodes) are their own
-    // component
-    nodes.join(fixedPoint, nodes("node") === fixedPoint("a"), "left")
-      .select(col("node"),
-        coalesce(col("b"), col("node")).as("component"))
+      .rdd.map(r => (r.getLong(0), r.getLong(1)))
+    first.localCheckpoint()
+    bigLoop(edges.sparkSession, first, first.count())
   }
+
+  /** (node, component) for every node of `keys` (column `node`),
+    * labeled straight from the star forest of `edges`: nodes with no
+    * forest entry (component minima, nodes in no edge) are their own
+    * component.
+    */
+  private def keyComponents(keys: DataFrame, edges: DataFrame): DataFrame = {
+    val f = forest(edges)
+    keys.join(f, keys("node") === f("a"), "left")
+      .select(col("node"), coalesce(col("b"), col("node")).as("component"))
+  }
+
+  /** The family's output shape: (node, component, component_size),
+    * ordered by node. The sizes come from one window exchange on
+    * `component`; the family's components are block-bounded (≤ a few
+    * thousand nodes), so no window partition grows with the data.
+    */
+  private def withSizes(comp: DataFrame): DataFrame =
+    comp.withColumn("component_size",
+        count(lit(1)).over(Window.partitionBy("component")))
+      .orderBy("node")
 
   /** The contraction loop: one LARGE-STAR + SMALL-STAR double round per
     * materialization, over the raw pair RDD with every per-key step
@@ -121,15 +146,18 @@ object ConnectedComponents {
     * branch emits ONE row per node and the right branch empties), so
     * the checksum repeats verbatim.
     */
-  private def bigLoop(first: DataFrame, nEdges: Long): DataFrame = {
-    val spark = first.sparkSession
+  private def bigLoop(spark: SparkSession, first: RDD[(Long, Long)],
+      nEdges: Long): DataFrame = {
     // data-proportional parallelism, the job AQE did for the DataFrame
-    // spelling: ~1M oriented pairs (16 MB) per reduce partition. At
-    // 10⁹ edges that is ~1000-way; at the forced small-scale run it
-    // collapses to 4, keeping per-round task count (5 stages × parts)
-    // from dominating wall time the way a cores-wide default did.
-    val parts = math.max(4L, nEdges / 1000000L).toInt
-    val part = new org.apache.spark.HashPartitioner(parts)
+    // spelling. A small graph runs ONE task per stage: each round is
+    // three stages, so per-task scheduling dominates a tiny round. A
+    // graph past ~64k pairs per partition spreads to the default
+    // parallelism, and past ~1M oriented pairs (16 MB) per partition
+    // the partition count grows with the data (~1000-way at 10⁹ edges).
+    val parts = Seq(
+      math.min((nEdges + (1L << 16) - 1) >> 16,
+        spark.sparkContext.defaultParallelism.toLong),
+      nEdges / 1000000L, 1L).max.toInt
 
     /** SECONDARY SORT: one sorted shuffle delivering each node's rows
       * as a CONTIGUOUS ASCENDING run — the run's first value IS
@@ -215,16 +243,14 @@ object ConnectedComponents {
         })
     }
 
-    var cur: RDD[(Long, Long)] = first.rdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-    var prevPersisted: RDD[(Long, Long)] = null
+    var cur = first
+    var prevPersisted = first // the entry checkpoint; freed after round 1
     var prevChk = 0L
     var prevCnt = -1L
     var converged = false
     var round = 0
     val maxRounds = 64 // ≫ log₂ of any conceivable node count
     while (!converged && round < maxRounds) {
-      val t0 = System.nanoTime()
       val stepped = starRound(cur)
       stepped.localCheckpoint() // materialized by the probe below;
       // truncates lineage so round-k task binaries stay O(1), not O(k)
@@ -239,12 +265,10 @@ object ConnectedComponents {
       converged = cnt == prevCnt && chk == prevChk
       prevCnt = cnt
       prevChk = chk
-      if (prevPersisted != null) prevPersisted.unpersist(false)
+      prevPersisted.unpersist(false)
       prevPersisted = stepped
       cur = stepped
       round += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $round%d cnt=$cnt%d ${(System.nanoTime()-t0)/1e6}%.0f ms")
     }
     if (!converged) throw new IllegalStateException(
       s"connected components did not converge in $maxRounds rounds")
@@ -253,7 +277,7 @@ object ConnectedComponents {
       cur.reduceByKey((x: Long, y: Long) => math.min(x, y), parts))
       .toDF("a", "b")
       .localCheckpoint(true) // edge-sized; frees the loop's RDD cache
-    if (prevPersisted != null) prevPersisted.unpersist(false)
+    prevPersisted.unpersist(false)
     forest
   }
 
@@ -374,18 +398,10 @@ object ConnectedComponents {
     val edges = next.unionAll(skip)
       .join(present, Seq("b"), "left_semi")
       .filter(expr(s"a DIV $chainLen = b DIV $chainLen"))
-    // components() covers nodes that appear in an edge; a customer
-    // alone in its block (count ≡ 1 mod chainLen) has none — join the
-    // full key set back so every node reports, matching the oracle
-    val comp = c.select(col("k").as("node"))
-      .join(components(edges), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("component"), col("node")).as("component"))
-    val sizes = comp.groupBy("component")
-      .agg(count(lit(1)).as("component_size"))
-    comp.join(sizes, "component")
-      .select(col("node"), col("component"), col("component_size"))
-      .orderBy("node")
+    // a customer alone in its block (count ≡ 1 mod chainLen) is in no
+    // edge — label the full key set so every node reports, matching
+    // the oracle
+    withSizes(keyComponents(c.select(col("k").as("node")), edges))
   }
 
   /** q162: components of a HUB-STAR graph over the dense customer-key
@@ -409,17 +425,9 @@ object ConnectedComponents {
     val edges = c.filter(pmod(col("k"), lit(starLen)) =!= 0L)
       .select((col("k") - pmod(col("k"), lit(starLen))).as("a"),
         col("k").as("b"))
-    // a lone block head appears in no edge — complete over the full
-    // key set (the q155 discipline)
-    val comp = c.select(col("k").as("node"))
-      .join(components(edges), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("component"), col("node")).as("component"))
-    val sizes = comp.groupBy("component")
-      .agg(count(lit(1)).as("component_size"))
-    comp.join(sizes, "component")
-      .select(col("node"), col("component"), col("component_size"))
-      .orderBy("node")
+    // a lone block head appears in no edge — label the full key set
+    // (the q155 discipline)
+    withSizes(keyComponents(c.select(col("k").as("node")), edges))
   }
 
   /** q157: INCREMENTAL resolution end to end — "yesterday" resolved
@@ -453,21 +461,13 @@ object ConnectedComponents {
     // merge below must read labels, never re-derive them from the
     // base edges — the cost contract a spec asserts with a scan
     // accumulator.
-    val labels = c.select(col("k").as("node"))
-      .join(components(baseEdges), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("component"), col("node")).as("component"))
+    val labels = keyComponents(c.select(col("k").as("node")), baseEdges)
       .localCheckpoint(true)
     // today's batch: (k, k+1) at every even→odd half-block boundary,
     // kept only when the far endpoint exists
     val bridges = c.filter(pmod(col("k"), lit(2L * half)) === half - 1L)
       .select(col("k").as("a"), (col("k") + 1L).as("b"))
       .join(c.select(col("k").as("b")), Seq("b"), "left_semi")
-    val merged = mergeComponents(labels, bridges)
-    val sizes = merged.groupBy("component")
-      .agg(count(lit(1)).as("component_size"))
-    merged.join(sizes, "component")
-      .select(col("node"), col("component"), col("component_size"))
-      .orderBy("node")
+    withSizes(mergeComponents(labels, bridges))
   }
 }

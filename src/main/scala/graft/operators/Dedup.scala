@@ -433,12 +433,25 @@ object Dedup {
     * stores between daily runs so corpus text is never re-shingled:
     * the prepared per-doc shingle arrays (`docs`: doc_id, hss, sz),
     * the shingle document frequencies (`dfreq`: h, df — the rare-first
-    * ordering key), and the prefix index (`prefix`: doc_id, sz, h).
-    * All three are eagerly materialized ([[nearDupState]]), so a
-    * downstream merge reads stored blocks, never the corpus lineage.
+    * ordering key), and the prefix index (`prefix`: doc_id, sz, h)
+    * with its row count (`prefixRows`, the size statistic a search
+    * gates its join strategy on). All three frames are eagerly
+    * materialized ([[nearDupState]]), so a downstream merge reads
+    * stored blocks, never the corpus lineage.
     */
   case class NearDupState(docs: DataFrame, dfreq: DataFrame,
-      prefix: DataFrame, threshold: Double)
+      prefix: DataFrame, threshold: Double, prefixRows: Long)
+
+  /** Eager localCheckpoint of a prefix index, returning its row count
+    * too. The count is an observed metric of the checkpoint's own job,
+    * so it costs no extra job.
+    */
+  private def checkpointPrefix(prefix: DataFrame): (DataFrame, Long) = {
+    val rows = org.apache.spark.sql.Observation()
+    val stored = prefix.observe(rows, count(lit(1)).as("n"))
+      .localCheckpoint(true)
+    (stored, rows.get("n").asInstanceOf[Long])
+  }
 
   /** Build [[NearDupState]] from a (doc_id, text) corpus frame — the
     * one-time (or yesterday's) pass: shingle every doc once, count
@@ -457,8 +470,8 @@ object Dedup {
     val dfreq = docs.select(explode(col("hss")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("df"))
       .localCheckpoint(true)
-    val prefix = prefixFrame(docs, dfreq, t).localCheckpoint(true)
-    NearDupState(docs, dfreq, prefix, threshold)
+    val (prefix, prefixRows) = checkpointPrefix(prefixFrame(docs, dfreq, t))
+    NearDupState(docs, dfreq, prefix, threshold, prefixRows)
   }
 
   /** INCREMENTAL near-dup: every exact-Jaccard-≥ threshold pair with
@@ -574,11 +587,12 @@ object Dedup {
     val fresh = batchText.join(
       state.docs.select(col("doc_id")), Seq("doc_id"), "left_anti")
     val batchDocs = shingledDocs(fresh).localCheckpoint(true)
-    val batchPrefix = prefixFrame(batchDocs, state.dfreq, t)
-      .localCheckpoint(true)
+    val (batchPrefix, batchRows) =
+      checkpointPrefix(prefixFrame(batchDocs, state.dfreq, t))
     val pairs = mergePairs(state, batchDocs, batchPrefix)
     val next = NearDupState(state.docs.unionAll(batchDocs),
-      state.dfreq, state.prefix.unionAll(batchPrefix), state.threshold)
+      state.dfreq, state.prefix.unionAll(batchPrefix), state.threshold,
+      state.prefixRows + batchRows)
     (pairs, next)
   }
 
@@ -604,8 +618,9 @@ object Dedup {
     val dfreq = state.docs.select(explode(col("hss")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("df"))
       .localCheckpoint(true)
-    NearDupState(state.docs, dfreq,
-      prefixFrame(state.docs, dfreq, t).localCheckpoint(true), cut)
+    val (prefix, prefixRows) =
+      checkpointPrefix(prefixFrame(state.docs, dfreq, t))
+    NearDupState(state.docs, dfreq, prefix, cut, prefixRows)
   }
 
   /** q168: the multi-day protocol end to end, proving the incremental
@@ -638,6 +653,11 @@ object Dedup {
     Present.smallSorted(pairs, "ai", "bi")
   }
 
+  /** Largest expected probe prefix [[jaccardTopK]] broadcasts: 500k
+    * (doc_id, sz, h) rows, ~16 MB as unsafe rows.
+    */
+  private val BroadcastProbeRows: Long = 500000L
+
   /** q170: exact TOP-K set-similarity SEARCH — for each probe
     * document (doc_id ≡ 0 mod `probeMod`), the `k` most-similar other
     * documents by word-3-gram Jaccard, among those with J ≥ `floor`
@@ -649,9 +669,15 @@ object Dedup {
     * Scale shape: the same prefix inverted index as
     * [[prefixJaccardPairs]], cut at the search floor (a low floor
     * means long prefixes — the honest cost of exact low-similarity
-    * search; the index is built once and amortizes over every probe
-    * batch). Candidates come from an equality join of probe prefixes
-    * against the index; ranking is the bounded `topk_rows` aggregate
+    * search). Each call builds the index ([[nearDupState]]); a
+    * caller holding a state could reuse it across probe batches, but
+    * this query does not. Candidates come from an equality join of
+    * probe prefixes against the index. The probe side is one doc in
+    * `probeMod`, so while its expected size (index rows / `probeMod`,
+    * counted by the state build) stays under [[BroadcastProbeRows]]
+    * it broadcasts and the index streams through the join unshuffled;
+    * past the bound the planner's shuffle join runs, with the same
+    * result. Ranking is the bounded `topk_rows` aggregate
     * — each map task reduces to ≤ k rows per probe before the
     * exchange, so the shuffle carries O(k·probes) rows and no
     * corpus-wide window sort ever runs.
@@ -662,9 +688,21 @@ object Dedup {
     val state = nearDupState(
       Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("text")), floor)
+    jaccardTopKPlan(state, probeMod, k,
+      broadcastProbe = state.prefixRows / probeMod <= BroadcastProbeRows)
+  }
+
+  /** [[jaccardTopK]]'s search over a built state (cut at the search
+    * floor), with the candidate join's strategy chosen by the caller —
+    * separate so a spec can run both branches of the gate.
+    */
+  private[graft] def jaccardTopKPlan(state: NearDupState, probeMod: Long,
+      k: Int, broadcastProbe: Boolean): DataFrame = {
+    val floor = state.threshold
     val probePrefix = state.prefix
       .filter(pmod(col("doc_id"), lit(probeMod)) === 0L)
-    val candidates = probePrefix.as("l").join(state.prefix.as("r"),
+    val probe = if (broadcastProbe) broadcast(probePrefix) else probePrefix
+    val candidates = probe.as("l").join(state.prefix.as("r"),
         col("l.h") === col("r.h") &&
           col("l.doc_id") =!= col("r.doc_id") && prefixSizeOk(floor - 1e-4))
       .select(col("l.doc_id").as("ai"), col("r.doc_id").as("bi"))

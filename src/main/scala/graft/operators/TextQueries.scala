@@ -585,8 +585,6 @@ object TextQueries {
       .filter(col("w") =!= "")
       .withColumn("fp", fingerprint(col("w")))
       .groupBy("w", "fp").agg(count(lit(1)).as("cnt")).persist()
-    // lazy-return path: released by the first consuming action
-    graft.plans.CacheRelease.afterFirstUse(counts)
     def bucket(i: Int) =
       pmod((lit(A(i)) * col("fp") + lit(B(i))) % lit(P), lit(width.toLong))
     val rows = A.indices.map { i =>

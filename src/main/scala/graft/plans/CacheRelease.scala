@@ -22,7 +22,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * cache-substituted logical plan, so unrelated queries never trigger
   * a release. If something else (clearCache, an explicit unpersist)
   * already dropped the cache, the listener deregisters itself on the
-  * next execution instead of lingering.
+  * next execution instead of lingering. A frame that is never
+  * consumed bounds its listener too: after [[MaxMisses]] executions
+  * that do not read the cache, the listener deregisters and leaves
+  * the cache to RDD GC, so unconsumed operator calls cannot pile up
+  * listeners that match every later execution.
   *
   * Contract for callers: register AFTER the operator's own internal
   * actions on the cache have run (a premature registration would
@@ -33,6 +37,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object CacheRelease {
 
+  /** Executions that do not read the cache before a listener gives up. */
+  val MaxMisses: Int = 100
+
   def afterFirstUse(cached: DataFrame): DataFrame = {
     val spark = cached.sparkSession
     val builder = cached.queryExecution.withCachedData.collectFirst {
@@ -40,6 +47,7 @@ object CacheRelease {
     }
     builder.foreach { b =>
       val listener: QueryExecutionListener = new QueryExecutionListener {
+        private var misses = 0
         private def maybeRelease(qe: QueryExecution): Unit = {
           val hit =
             try qe.withCachedData.exists {
@@ -48,7 +56,8 @@ object CacheRelease {
             } catch { case _: Throwable => false }
           val alreadyGone = cached.storageLevel ==
             org.apache.spark.storage.StorageLevel.NONE
-          if (hit || alreadyGone) {
+          if (!hit) misses += 1
+          if (hit || alreadyGone || misses >= MaxMisses) {
             if (hit) cached.unpersist(false)
             spark.listenerManager.unregister(this)
           }

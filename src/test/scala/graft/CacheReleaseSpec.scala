@@ -40,6 +40,23 @@ class CacheReleaseSpec extends SparkSpec {
       "the consuming action failed to release the cache")
   }
 
+  test("a never-consumed frame's listener deregisters after N misses") {
+    import spark.implicits._
+    val base = (1 to 100).toDF("x").persist()
+    base.count() // materialize BEFORE registering (internal-use shape)
+    graft.plans.CacheRelease.afterFirstUse(base)
+    (1 to graft.plans.CacheRelease.MaxMisses)
+      .foreach(_ => spark.range(1).count()) // a full miss budget
+    drain()
+    // the listener gave up: a consumer arriving now releases nothing,
+    // and the cache falls back to RDD GC (the pre-release behavior)
+    base.select($"x" + 1).count()
+    drain()
+    assert(base.storageLevel != StorageLevel.NONE,
+      "the listener outlived its miss budget and released the cache")
+    base.unpersist(false)
+  }
+
   test("two lazy-return queries back-to-back leave no cache behind") {
     // q24 and q70 both persist intermediates and return LAZY frames —
     // the exact r13 leak shape. Consume each, then assert the queries

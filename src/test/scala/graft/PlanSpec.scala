@@ -701,4 +701,98 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
       s"a-priori prune is not a broadcast semi-join:\n$plan")
   }
+
+  /** Run `body` and return the call site of every job it started (the
+    * result stage's name, e.g. "fold at ConnectedComponents.scala:N").
+    */
+  private def jobCallSites(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        sites.add(js.stageInfos.maxBy(_.stageId).name); ()
+      }
+    }
+    org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    sites.asScala.toSeq
+  }
+
+  /** One curation-loop query, run to a noop sink the way the bench
+    * runs it; the second of two runs is measured.
+    */
+  private def curationJobs(name: String): Seq[String] = {
+    def once(): Unit = SparkEntry.queries(name)(spark, sf)
+      .write.format("noop").mode("overwrite").save()
+    once()
+    jobCallSites(once())
+  }
+
+  test("q155: job budget, with the contraction's round count unchanged") {
+    val sites = curationJobs("q155_connected_components")
+    // one fold job per contraction round; a 150-node chain with skip-2
+    // shortcuts needs 8 double rounds (7 to contract, 1 to confirm)
+    val rounds = sites.count(_.startsWith("fold at ConnectedComponents"))
+    assert(rounds === 8, s"round count moved:\n${sites.mkString("\n")}")
+    assert(sites.size <= 18,
+      s"q155 ran ${sites.size} jobs:\n${sites.mkString("\n")}")
+  }
+
+  test("q170: broadcast probe prefix keeps the job budget") {
+    val sites = curationJobs("q170_jaccard_search")
+    assert(sites.size <= 13,
+      s"q170 ran ${sites.size} jobs:\n${sites.mkString("\n")}")
+    // the probe side broadcasts: the index streams through the
+    // candidate join unshuffled
+    val df = graft.operators.Dedup.jaccardTopK(spark, sf)
+    df.collect()
+    val joins = allPlanNodes(df.queryExecution.executedPlan).collect {
+      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+          if j.condition.exists(_.toString.contains("doc_id")) &&
+            j.buildSide ==
+              org.apache.spark.sql.catalyst.optimizer.BuildLeft => j
+    }
+    assert(joins.nonEmpty,
+      s"candidate join did not broadcast:\n${planOf(df)}")
+    // the gate's fallback (a shuffle join) answers identically
+    import org.apache.spark.sql.functions.col
+    val state = graft.operators.Dedup.nearDupState(
+      graft.sources.Tables.load(spark, sf, "documents")
+        .select(col("doc_id"), col("text")), 0.1)
+    def search(bc: Boolean) = graft.operators.Dedup.jaccardTopKPlan(
+      state, probeMod = 10L, k = 5, broadcastProbe = bc)
+    val (b, f) = (search(bc = true), search(bc = false))
+    assert(b.schema === f.schema)
+    assert(b.collect().toSeq === f.collect().toSeq)
+    assert(b.collect().toSeq === df.collect().toSeq)
+  }
+
+  test("q147: packed and two-column pair plans share one output schema") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, count, lit, sort_array,
+      collect_set}
+    // INT part ids: the fallback used to keep the element type while
+    // the packed branch decoded longs
+    val baskets = (1 to 40).flatMap(o =>
+      (1 to 4).map(k => (o.toLong, (o * 7 + k * 13) % 17 + 1)))
+      .toDF("o", "p")
+    val adj = baskets.groupBy("o")
+      .agg(sort_array(collect_set(col("p"))).as("ps"))
+    val margins = baskets.distinct()
+      .groupBy("p").agg(count(lit(1)).as("c"))
+    def lift(packed: Boolean) =
+      graft.operators.OlapQueries.copurchaseLiftPlanAdj(adj, margins,
+        nOrders = 40L, minSupport = 2, topK = 10, packPairs = packed)
+    val (p, f) = (lift(packed = true), lift(packed = false))
+    assert(p.schema.map(c => (c.name, c.dataType)) ===
+      f.schema.map(c => (c.name, c.dataType)),
+      s"gate changes the schema:\n${p.schema}\n${f.schema}")
+    assert(p.collect().toSeq === f.collect().toSeq)
+  }
 }

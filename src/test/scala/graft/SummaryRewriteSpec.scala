@@ -3490,8 +3490,9 @@ class SummaryRewriteSpec extends SparkSpec {
     OlapQueries.registerDeleteDemo(spark, sf)
     try {
       val ps = scanPaths(OlapQueries.deleteCompQuery(spark, sf))
-      assert(ps.nonEmpty && ps.forall(_.contains("graft_summaries")),
-        s"compensated read must never touch the source: $ps")
+      // the route q191's query path reports on (it never throws)
+      assert(OlapQueries.deleteCompRouted(ps),
+        s"compensated read must scan summary + cube only: $ps")
       assert(ps.count(_.contains("_files")) == 1,
         s"expected exactly one cube-sidecar scan: $ps")
       assert(ps.count(!_.contains("_files")) == 1,
