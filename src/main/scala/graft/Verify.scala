@@ -3,9 +3,14 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * plus oracle_sql.json, for the DuckDB oracle compare, and
+  * failures.json (name → exception class, message, root cause and the
+  * first stack frames) for every query that threw.
   */
 object Verify {
+  /** Stack frames kept per failure in failures.json. */
+  val StackFrames = 12
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -27,11 +32,13 @@ object Verify {
       .map(_.split(",").map(_.trim).toSet)
     val attempted = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
     attempted.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failures(name) = e
       } finally spark.catalog.clearCache()
     }
     // manifest of ATTEMPTED queries: the oracle compare fails any
@@ -59,6 +66,22 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // why each failed query has no output: a stderr line alone is lost
+    // with the run's log. The root cause is named apart from the
+    // (often SparkException-wrapped) exception that reached this loop.
+    def root(e: Throwable): Throwable =
+      Option(e.getCause).filter(_ ne e).fold(e)(root)
+    val failed = failures.map { case (name, e) =>
+      val r = root(e)
+      s"${q(name)}: {" + Seq(
+        "class" -> q(e.getClass.getName),
+        "message" -> q(String.valueOf(e.getMessage)),
+        "cause" -> q(s"${r.getClass.getName}: ${r.getMessage}"),
+        "stack" -> e.getStackTrace.take(StackFrames).map(f => q(f.toString))
+          .mkString("[", ",", "]"))
+        .map { case (k, v) => s"${q(k)}: $v" }.mkString(",") + "}"
+    }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failed)
     spark.stop()
   }
 }

@@ -2299,7 +2299,7 @@ object OlapQueries {
   }
 
   private[graft] def deltaDemoName(sfDir: String): String =
-    "lineitem_delta_" + new java.io.File(sfDir).getName
+    "lineitem_delta_" + new java.io.File(sfDir).getName + perProcess
 
   private[graft] def deltaDemoDir(sfDir: String): String =
     new java.io.File("spark-warehouse/graft_delta_demo/" +
@@ -2372,7 +2372,7 @@ object OlapQueries {
   }
 
   private[graft] def deltaJoinDemoName(sfDir: String): String =
-    "li_ord_delta_" + new java.io.File(sfDir).getName
+    "li_ord_delta_" + new java.io.File(sfDir).getName + perProcess
 
   private[graft] def deltaJoinDemoDir(sfDir: String): String =
     new java.io.File("spark-warehouse/graft_delta_demo/" +
@@ -2597,7 +2597,7 @@ object OlapQueries {
   }
 
   private[graft] def reblessDemoName(sfDir: String): String =
-    "li_rebless_" + new java.io.File(sfDir).getName
+    "li_rebless_" + new java.io.File(sfDir).getName + perProcess
 
   private[graft] def reblessDemoDir(sfDir: String): String =
     new java.io.File("spark-warehouse/graft_rebless_demo/" +
@@ -2679,7 +2679,8 @@ object OlapQueries {
   }
 
   private[graft] def sqlDdlDemoName(sfDir: String): String =
-    "li_ddl_" + new java.io.File(sfDir).getName.replace('.', '_')
+    "li_ddl_" + new java.io.File(sfDir).getName.replace('.', '_') +
+      perProcess
 
   private[graft] def registerSqlDdlDemo(spark: SparkSession,
       sfDir: String): Unit =
@@ -2760,13 +2761,16 @@ object OlapQueries {
     }.flatten
   }
 
-  /** Unique per process: the fixture's summary spec and copied table
-    * are CWD-relative, so two JVMs in one directory (a bench beside a
-    * Verify) must never rebuild or drop each other's copy.
+  /** Suffix of every `*DemoName`: a demo fixture's summary spec and
+    * copied table are CWD-relative, so two JVMs in one directory (a
+    * bench beside a Verify) must never rebuild or drop each other's
+    * copy.
     */
+  private[graft] val perProcess: String =
+    "_p" + ProcessHandle.current().pid()
+
   private[graft] def deleteDemoName(sfDir: String): String =
-    "li_delcomp_" + new java.io.File(sfDir).getName + "_p" +
-      ProcessHandle.current().pid()
+    "li_delcomp_" + new java.io.File(sfDir).getName + perProcess
 
   private[graft] def deleteDemoDir(sfDir: String): String =
     new java.io.File("spark-warehouse/graft_delete_demo/" +

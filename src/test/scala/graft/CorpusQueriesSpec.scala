@@ -38,30 +38,44 @@ class CorpusQueriesSpec extends SparkSpec {
   }
 
   test("q65 length CDF ≡ the cume_dist window spelling, no WindowExec") {
+    // the shard route (threshold −1): PrefixSum's per-shard window
+    withoutBroadcast {
+      val got = TextQueries.lengthCdf(spark, sf)
+      val viaWindow = Tables.load(spark, sf, "documents")
+        .select(col("doc_id"), col("n_chars"))
+        .withColumn("len_cdf",
+          round(cume_dist().over(Window.orderBy("n_chars")), 4))
+      assert(got.collect().map(_.toSeq).toSet ==
+        viaWindow.collect().map(_.toSeq).toSet)
+      // the rewrite's point: the corpus is never sorted through a
+      // single-partition window — the only window left is PrefixSum's
+      // per-shard cumsum, which must carry a partition spec
+      got.collect() // finalize the adaptive plan before inspecting it
+      import org.apache.spark.sql.execution.SparkPlan
+      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      def allNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
+        case s: QueryStageExec => allNodes(s.plan)
+        case _ => p.children.flatMap(allNodes)
+      })
+      val windows = allNodes(got.queryExecution.executedPlan).collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }
+      assert(windows.nonEmpty, "expected PrefixSum's per-shard window")
+      assert(windows.forall(_.partitionSpec.nonEmpty),
+        s"un-partitioned WindowExec:\n${got.queryExecution.executedPlan}")
+    }
+  }
+
+  test("q65 length CDF, broadcast route: no WindowExec at all") {
     val got = TextQueries.lengthCdf(spark, sf)
-    val viaWindow = Tables.load(spark, sf, "documents")
-      .select(col("doc_id"), col("n_chars"))
-      .withColumn("len_cdf",
-        round(cume_dist().over(Window.orderBy("n_chars")), 4))
-    assert(got.collect().map(_.toSeq).toSet ==
-      viaWindow.collect().map(_.toSeq).toSet)
-    // the rewrite's point: the corpus is never sorted through a
-    // single-partition window — the only window left is PrefixSum's
-    // per-shard cumsum, which must carry a partition spec
-    got.collect() // finalize the adaptive plan before inspecting it
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
-      case s: QueryStageExec => allNodes(s.plan)
-      case _ => p.children.flatMap(allNodes)
-    })
-    val windows = allNodes(got.queryExecution.executedPlan).collect {
+    val viaShards = withoutBroadcast(TextQueries.lengthCdf(spark, sf).collect())
+    assert(got.collect().toSeq == viaShards.toSeq)
+    val windows = allPlanNodes(got.queryExecution.executedPlan).collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }
-    assert(windows.nonEmpty, "expected PrefixSum's per-shard window")
-    assert(windows.forall(_.partitionSpec.nonEmpty),
-      s"un-partitioned WindowExec:\n${got.queryExecution.executedPlan}")
+    assert(windows.isEmpty,
+      s"the broadcast route still windows:\n${got.queryExecution.executedPlan}")
   }
 
   test("q171 perplexity buckets ≡ the global-window spelling, " +
@@ -134,29 +148,44 @@ class CorpusQueriesSpec extends SparkSpec {
 
   test("q176 vocab growth ≡ the window spelling; monotone; " +
       "no un-partitioned WindowExec") {
+    // the shard route (threshold −1): PrefixSum's per-shard window
+    withoutBroadcast {
+      val got = TextQueries.vocabGrowth(spark, sf)
+      val firstDay = Tables.load(spark, sf, "documents")
+        .select(expr("doc_id div 100").as("day"),
+          explode(Dedup.wordShingles(col("text"))).as("w"))
+        .groupBy("w").agg(min("day").as("day"))
+      val viaWindow = firstDay.groupBy("day")
+        .agg(count(lit(1)).as("new_terms"))
+        .withColumn("cum_vocab",
+          sum("new_terms").over(Window.orderBy("day")))
+      assert(got.collect().map(_.toSeq).toSet ==
+        viaWindow.collect().map(_.toSeq).toSet)
+      // the curve GROWS (multiple batches introduce grams — the reason
+      // this is gram- not word-grain) and ends at the full vocabulary
+      val rows = got.collect()
+      assert(rows.length > 1, "degenerate curve: one batch owns all grams")
+      assert(rows.map(_.getLong(2)).toSeq ==
+        rows.map(_.getLong(2)).sorted.toSeq)
+      assert(rows.last.getLong(2) == firstDay.count())
+      got.collect() // finalize the adaptive plan before inspecting it
+      val windows = allPlanNodes(got.queryExecution.executedPlan).collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }
+      assert(windows.nonEmpty && windows.forall(_.partitionSpec.nonEmpty))
+    }
+  }
+
+  test("q176 vocab growth, broadcast route: no WindowExec at all") {
     val got = TextQueries.vocabGrowth(spark, sf)
-    val firstDay = Tables.load(spark, sf, "documents")
-      .select(expr("doc_id div 100").as("day"),
-        explode(Dedup.wordShingles(col("text"))).as("w"))
-      .groupBy("w").agg(min("day").as("day"))
-    val viaWindow = firstDay.groupBy("day")
-      .agg(count(lit(1)).as("new_terms"))
-      .withColumn("cum_vocab",
-        sum("new_terms").over(Window.orderBy("day")))
-    assert(got.collect().map(_.toSeq).toSet ==
-      viaWindow.collect().map(_.toSeq).toSet)
-    // the curve GROWS (multiple batches introduce grams — the reason
-    // this is gram- not word-grain) and ends at the full vocabulary
-    val rows = got.collect()
-    assert(rows.length > 1, "degenerate curve: one batch owns all grams")
-    assert(rows.map(_.getLong(2)).toSeq ==
-      rows.map(_.getLong(2)).sorted.toSeq)
-    assert(rows.last.getLong(2) == firstDay.count())
-    got.collect() // finalize the adaptive plan before inspecting it
+    val viaShards =
+      withoutBroadcast(TextQueries.vocabGrowth(spark, sf).collect())
+    assert(got.collect().toSeq == viaShards.toSeq)
     val windows = allPlanNodes(got.queryExecution.executedPlan).collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }
-    assert(windows.nonEmpty && windows.forall(_.partitionSpec.nonEmpty))
+    assert(windows.isEmpty,
+      s"the broadcast route still windows:\n${got.queryExecution.executedPlan}")
   }
 
   test("q66 repetition stats ≡ the explode + groupBy spelling") {

@@ -1,20 +1,49 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.operators.PrefixSum
 
 class PrefixSumSpec extends SparkSpec {
+
+  private case class Run(cums: Seq[Long], totals: Seq[(Long, Long)],
+      schema: StructType, windowed: Boolean)
+
+  private def run(df: DataFrame, value: Column, width: Long): Run = {
+    val (out, totals) = PrefixSum.withGlobalCumSumAndTotals(
+      df, "k", value, "cum", width)
+    val windowed = allPlanNodes(out.queryExecution.executedPlan)
+      .exists(_.isInstanceOf[WindowExec])
+    Run(out.orderBy("k").select("cum").collect().map(_.getLong(0)).toSeq,
+      totals, out.schema, windowed)
+  }
+
+  /** Both routes over one input: equal cums, equal totals, identical
+    * schema (names, types, nullability), and each took its own plan —
+    * a small input broadcasts its key index, threshold −1 windows.
+    */
+  private def bothRoutes(df: DataFrame, value: Column, width: Long): Run = {
+    val b = run(df, value, width)
+    val s = withoutBroadcast(run(df, value, width))
+    assert(!b.windowed, "a small input did not take the broadcast route")
+    assert(s.windowed, "threshold -1 did not force the shard route")
+    assert(b.cums == s.cums)
+    assert(b.totals == s.totals)
+    assert(b.schema == s.schema,
+      s"route schemas differ:\n${b.schema.treeString}\n${s.schema.treeString}")
+    b
+  }
 
   private def check(keys: Seq[Long], shardWidth: Long): Unit = {
     import spark.implicits._
     val rng = new scala.util.Random(3)
     val rows = keys.map(k => (k, rng.nextInt(100).toLong))
     val want = rows.sortBy(_._1).scanLeft(0L)(_ + _._2).tail
-    val got = PrefixSum
-      .withGlobalCumSum(rows.toDF("k", "x").repartition(7), "k", col("x"),
-        "cum", shardWidth)
-      .orderBy("k").select("cum").collect().map(_.getLong(0))
-    assert(got.sameElements(want))
+    val got = bothRoutes(rows.toDF("k", "x").repartition(7), col("x"),
+      shardWidth)
+    assert(got.cums == want)
   }
 
   test("multi-shard cumsum equals the sequential running sum") {
@@ -35,31 +64,76 @@ class PrefixSumSpec extends SparkSpec {
     val rows = (0L until 500L).map(_ * 3L + 1L).map(k =>
       (k, rng.nextInt(100).toLong))
     val width = 64L
-    val (cumDf, totals) = PrefixSum.withGlobalCumSumAndTotals(
-      rows.toDF("k", "x").repartition(5), "k", col("x"), "cum", width)
+    val got = bothRoutes(rows.toDF("k", "x").repartition(5), col("x"), width)
     // totals: one (shard, sum) per non-empty shard, sorted by shard —
     // exactly what a caller deriving per-range offsets on the driver
     // (percentilesByGroupMulti's stripe index) relies on
     val want = rows.groupBy(_._1 / width).view
       .mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
-    assert(totals == want)
+    assert(got.totals == want)
     // and the cumsum half is the same frame withGlobalCumSum returns
-    val got = cumDf.orderBy("k").select("cum").collect().map(_.getLong(0))
     val seq = rows.sortBy(_._1).scanLeft(0L)(_ + _._2).tail
-    assert(got.sameElements(seq))
+    assert(got.cums == seq)
   }
 
   test("null values count as 0 in both passes; reserved names rejected") {
     import spark.implicits._
     val rows = Seq((0L, Some(5L)), (1L, None), (2L, Some(7L)), (3L, None))
-    val got = PrefixSum
-      .withGlobalCumSum(rows.toDF("k", "x"), "k", col("x"), "cum",
-        shardWidth = 2)
-      .orderBy("k").select("cum").collect().map(_.getLong(0))
-    assert(got.toSeq == Seq(5L, 5L, 12L, 12L))
+    val got = bothRoutes(rows.toDF("k", "x"), col("x"), 2L)
+    assert(got.cums == Seq(5L, 5L, 12L, 12L))
     intercept[IllegalArgumentException] {
       PrefixSum.withGlobalCumSum(
         Seq((1L, 1L)).toDF("k", "__v"), "k", col("__v"), "cum")
     }
+  }
+
+  test("a repeated key takes the shard route, which tolerates ties") {
+    import spark.implicits._
+    val keys = Seq(0L, 1L, 1L, 2L, 5L, 5L, 5L, 9L)
+    val got = run(keys.toDF("k").repartition(3), lit(1), 4L)
+    assert(got.windowed, "duplicate keys must fall back to the window")
+    // ties take some order, but every row still gets its own rank
+    assert(got.cums.sorted == (1L to keys.length.toLong))
+    assert(got.totals == Seq((0L, 4L), (1L, 3L), (2L, 1L)))
+  }
+
+  test("a null order key is rejected by name on both routes") {
+    import spark.implicits._
+    val df = Seq((Some(0L), 1L), (None, 2L), (Some(4L), 3L)).toDF("k", "x")
+    val errs = Seq(
+      intercept[IllegalArgumentException](
+        PrefixSum.withGlobalCumSum(df, "k", col("x"), "cum", 2L)),
+      withoutBroadcast(intercept[IllegalArgumentException](
+        PrefixSum.withGlobalCumSum(df, "k", col("x"), "cum", 2L))))
+    errs.foreach(e => assert(e.getMessage.contains("`k`"), e.getMessage))
+  }
+
+  test("broadcast route: the call runs one job, the frame no shuffle") {
+    import org.apache.spark.scheduler._
+    val df = spark.range(0L, 1000L, 1L, 3)
+      .select(col("id").as("k"), (col("id") % 7).as("x"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m =>
+          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
+    sc.addSparkListener(listener)
+    try {
+      val out = PrefixSum.withGlobalCumSum(df, "k", col("x"), "cum")
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
+      assert(jobs.get() === 1, s"the call ran ${jobs.get()} jobs")
+      val rows = out.collect()
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
+      assert(shuffled.get() === 0L,
+        s"executing the frame wrote ${shuffled.get()} shuffle bytes")
+      assert(rows.map(_.getLong(2)).max == (0L until 1000L).map(_ % 7).sum)
+    } finally sc.removeSparkListener(listener)
   }
 }

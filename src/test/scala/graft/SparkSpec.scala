@@ -24,6 +24,16 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
 
+  /** Run `f` with `spark.sql.autoBroadcastJoinThreshold` = −1, restored
+    * after: broadcast joins off, and PrefixSum on its shard route.
+    */
+  protected def withoutBroadcast[T](f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Pre-order walk of an executed plan, descending through AQE's
     * runtime structure — the shared base of plan-shape asserts.
     */

@@ -3499,4 +3499,18 @@ class SummaryRewriteSpec extends SparkSpec {
         s"expected exactly one summary scan: $ps")
     } finally OlapQueries.dropDeleteDemo(spark, sf)
   }
+
+  test("every demo fixture name carries the process id") {
+    // the names key CWD-relative summary specs and table copies: two
+    // JVMs in one directory must never share one
+    val pid = ProcessHandle.current().pid()
+    val names = OlapQueries.getClass.getMethods.toSeq
+      .filter(m => m.getName.endsWith("DemoName") &&
+        m.getParameterCount == 1)
+    assert(names.size >= 5, names.map(_.getName))
+    names.foreach { m =>
+      val n = m.invoke(OlapQueries, sf).asInstanceOf[String]
+      assert(n.endsWith(s"_p$pid"), s"${m.getName}($sf) = $n")
+    }
+  }
 }

@@ -48,6 +48,12 @@ def main(out_dir, sf_dir):
     all_queries = None
     if os.path.exists(all_path):
         all_queries = set(open(all_path).read().split())
+    # why an attempted query has no output: Verify records the
+    # exception of every query that threw
+    failures_path = f"{out_dir}/failures.json"
+    failures = {}
+    if os.path.exists(failures_path):
+        failures = json.load(open(failures_path))
     for name, sql in sorted(oracle.items()):
         if all_queries is not None and name not in all_queries:
             print(f"FAIL {name}: oracle key matches no registered query")
@@ -58,6 +64,8 @@ def main(out_dir, sf_dir):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"FAIL {name}: no spark output")
+            if name in failures:
+                print(json.dumps(failures[name], indent=2))
             n_fail += 1
             continue
         try:
