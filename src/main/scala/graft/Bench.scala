@@ -52,6 +52,27 @@ package graft
   */
 object Bench {
 
+  /** Task-metric bytes since the last `reset`: shuffle read, shuffle
+    * write and spill (memory + disk) — the one definition Bench and
+    * TimeQueries both report.
+    */
+  class ByteListener extends org.apache.spark.scheduler.SparkListener {
+    private val sr = new java.util.concurrent.atomic.AtomicLong
+    private val sw = new java.util.concurrent.atomic.AtomicLong
+    private val sp = new java.util.concurrent.atomic.AtomicLong
+    override def onTaskEnd(
+        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+      val m = te.taskMetrics
+      if (m != null) {
+        sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        sp.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
+      }
+    }
+    def reset(): Unit = { sr.set(0); sw.set(0); sp.set(0) }
+    def snapshot(): (Long, Long, Long) = (sr.get, sw.get, sp.get)
+  }
+
   /** The mechanical form of the bytes-regression rule (PROFILE.md
     * round 9 had it as prose): shuffle bytes and spill are PLAN
     * properties, near-identical across samples of an unchanged plan,
@@ -137,22 +158,7 @@ object Bench {
     // per-run task-metric bytes: shuffle read/write + spill, so a
     // scale-killer regression (a new exchange, a new spill) is caught
     // by DIFFING artifacts instead of re-profiling
-    val byteListener = new org.apache.spark.scheduler.SparkListener {
-      val sr = new java.util.concurrent.atomic.AtomicLong
-      val sw = new java.util.concurrent.atomic.AtomicLong
-      val sp = new java.util.concurrent.atomic.AtomicLong
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          sp.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        }
-      }
-      def reset(): Unit = { sr.set(0); sw.set(0); sp.set(0) }
-      def snapshot(): (Long, Long, Long) = (sr.get, sw.get, sp.get)
-    }
+    val byteListener = new ByteListener
     spark.sparkContext.addSparkListener(byteListener)
 
     // the control: a fixed CPU-bound job with no data dependence —

@@ -14,32 +14,20 @@ object TimeQueries {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // per-run shuffle/spill bytes (Bench's listener, dev-sized): bytes
-    // are plan properties, the noise-free A/B signal on this machine
-    val sr = new java.util.concurrent.atomic.AtomicLong
-    val sw = new java.util.concurrent.atomic.AtomicLong
-    val sp = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            sp.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-          }
-        }
-      })
+    // per-run shuffle/spill bytes (Bench's listener): bytes are plan
+    // properties, the A/B signal wall time cannot give
+    val bytes = new Bench.ByteListener
+    spark.sparkContext.addSparkListener(bytes)
     def run(name: String): (Double, Long, Long, Long) = {
       val fn = SparkEntry.queries(name)
-      sr.set(0); sw.set(0); sp.set(0)
+      bytes.reset()
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 10000L)
       spark.catalog.clearCache()
-      (dt, sr.get, sw.get, sp.get)
+      val (r, w, s) = bytes.snapshot()
+      (dt, r, w, s)
     }
     args.foreach { name =>
       run(name) // warm-up: codegen + broadcasts + FS cache

@@ -9,10 +9,13 @@ import graft.sources.Tables
 /** CONNECTED COMPONENTS by alternating large-star / small-star
   * contraction (Kiveris et al., "Connected Components in MapReduce
   * and Beyond", SoCC'14) — the doubling algorithm whose round count
-  * is O(log n) regardless of component DIAMETER, where min-label
-  * propagation (even with pointer jumping, [[Dedup.resolveClusters]])
-  * needs O(log diameter) rounds and a 10⁶-long chain would take ~20
-  * materializations.
+  * is O(log n) regardless of component DIAMETER.
+  *
+  * The one place graft computes the components of a data graph:
+  * [[resolve]] is the shared gate (driver union-find at or under
+  * [[LocalEdgeBound]] edges, the contraction above it) behind
+  * [[mergeComponents]] and [[Dedup.resolveClusters]]; q155/q157/q162
+  * label their key sets straight from the contraction's star forest.
   *
   * Each round is two contraction steps over the edge list — no driver
   * -side graph state:
@@ -307,8 +310,7 @@ object ConnectedComponents {
     * union graph, identical to a from-scratch resolve (spec-proven).
     */
   def mergeComponents(labels: DataFrame, newEdges: DataFrame,
-      localResolveBound: Long = 1000000L): DataFrame = {
-    val spark = labels.sparkSession
+      localEdgeBound: Long = LocalEdgeBound): DataFrame = {
     val l = labels.select(col("node").cast("long").as("node"),
       col("component").cast("long").as("component"))
     val e = newEdges.select(col("a").cast("long").as("a"),
@@ -321,16 +323,11 @@ object ConnectedComponents {
         l.select(col("node").as("nb"), col("component").as("cb")),
         la("b") === col("nb"), "left")
       .select(col("a"), coalesce(col("cb"), col("b")).as("b"))
-      .localCheckpoint(true) // read by the size gate AND the resolve
-    // contraction over the batch-sized label graph: old-rep/new-node →
-    // merged component min. Statistics-gated like Dedup's cluster
-    // resolution: a small condensed graph (the common daily case —
-    // today's batch touches few components) finishes as a driver
-    // union-find in one collect; past the bound the distributed
-    // doubling loop runs
-    val rel = (if (condensed.count() <= localResolveBound)
-        localComponents(spark, condensed)
-      else components(condensed))
+    // components of the batch-sized label graph: old-rep/new-node →
+    // merged component min. A small condensed graph (the common daily
+    // case — today's batch touches few components) finishes as a
+    // driver union-find
+    val rel = resolve(condensed, localEdgeBound)
       .select(col("node").as("rl"), col("component").as("rc"))
       .localCheckpoint(true) // tiny; read by two joins below
     // old labels rewrite through the condensed result (untouched
@@ -347,13 +344,34 @@ object ConnectedComponents {
     rewritten.unionAll(newNodes)
   }
 
-  /** Driver union-find over a collected edge list — the small-graph
-    * finish of [[mergeComponents]] (same contract as [[components]]:
-    * every node that appears in an edge, component = reachable min;
-    * self-loops and duplicates tolerated).
+  /** The largest edge list [[resolve]] collects to the driver: 1M
+    * pairs of longs is 16 MB.
     */
-  private def localComponents(spark: SparkSession,
-      edges: DataFrame): DataFrame = {
+  val LocalEdgeBound: Long = 1000000L
+
+  /** (node, component) for every node that appears in `edges` (columns
+    * a, b), gated on the edge count: the edges are cast to long and
+    * checkpointed eagerly, and a list of at most `localEdgeBound`
+    * pairs finishes as a driver union-find in one collect — each
+    * distributed round costs a scheduler round-trip that a single
+    * union-find beats by orders of magnitude on such a graph — while a
+    * larger one runs the contraction ([[components]]). Both routes
+    * emit the same labels; 0 forces the contraction.
+    */
+  private[graft] def resolve(edges: DataFrame,
+      localEdgeBound: Long): DataFrame = {
+    val e = edges.select(col("a").cast("long").as("a"),
+        col("b").cast("long").as("b"))
+      .localCheckpoint(true) // read by the size gate AND the resolve
+    if (e.count() <= localEdgeBound) localComponents(e) else components(e)
+  }
+
+  /** Driver union-find over a collected edge list of longs — the
+    * small-graph route of [[resolve]] (same contract as
+    * [[components]]).
+    */
+  private def localComponents(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
     import spark.implicits._
     val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
     val parent = scala.collection.mutable.LongMap.empty[Long]

@@ -744,100 +744,23 @@ object Dedup {
 
   /** Resolve near-dup pairs into clusters and pick one representative
     * per cluster (the minimum doc_id) — the "keep one copy" step a
-    * production dedup pipeline ends with.
-    *
-    * Two regimes, cut over on the materialized edge count — the shape
-    * of every production connected-components job (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond"): iterate
-    * distributed only while the graph is too big to hold, and FINISH
-    * locally once it contracts under the limit, because each
-    * distributed round costs a full scheduler round-trip that a
-    * single-task union-find beats by orders of magnitude.
-    *
-    *  - edges ≤ `localEdgeLimit` (default 4M ≈ 64 MB of longs): the
-    *    checkpointed pair list is collected, union-found on the driver
-    *    (path-halving + min-root merge), and the labels parallelize
-    *    back — 2 jobs total. The near-dup pair list of even a large
-    *    corpus usually lands here: pairs are the OUTPUT of LSH
-    *    pruning, not the corpus.
-    *  - above the limit: min-label propagation with pointer jumping —
-    *    each doc repeatedly adopts the smallest label in its
-    *    neighborhood; rounds = O(log diameter), one materializing job
-    *    per round, all equality-keyed shuffles on the (tiny) label
-    *    frame.
+    * production dedup pipeline ends with. A relabel over
+    * [[ConnectedComponents.resolve]]: the pair list is checkpointed
+    * once (the LSH pipeline that produced it never re-runs) and
+    * resolved by the driver union-find when it has at most
+    * `localEdgeBound` pairs — where the near-dup pair list of even a
+    * large corpus usually lands, since pairs are the OUTPUT of LSH
+    * pruning, not the corpus — and by the star contraction above
+    * that. Output: (doc_id, cluster_rep = component min, keep) for
+    * every doc in a pair.
     */
   def resolveClusters(pairs: DataFrame,
-      localEdgeLimit: Long = 4000000L,
-      maxIter: Int = 50): DataFrame = {
-    // One eager materialization of the pair list — everything
-    // downstream reads these checkpointed blocks; the LSH pipeline
-    // that produced them never re-runs.
-    val p = pairs.select(col("ai").as("a"), col("bi").as("b"))
-      .localCheckpoint(true)
-    // Size the graph partitioning from the pair count (~1M edges per
-    // task), never a hardcoded constant: the near-dup graph is ≪ the
-    // corpus but still grows with it.
-    val nPairs = p.count()
-    if (nPairs <= localEdgeLimit) return resolveClustersLocal(p)
-    val graphParts = math.max(1, math.min(1024, (nPairs / 1000000L).toInt + 1))
-    // Hash-partition edges by the join side (b) once, before the
-    // checkpoint: localCheckpoint preserves outputPartitioning, so the
-    // per-round join on b === id shuffles only the (smaller) label
-    // side, not the edge list.
-    val edges = p
-      .union(p.select(col("b").as("a"), col("a").as("b")))
-      .repartition(graphParts, col("b"))
-      .localCheckpoint(true)
-    // Initial labels fold into round 1's plan — no materialization.
-    var labels = edges.select(col("a").as("id"), col("a").as("label"))
-      .union(edges.select(col("b").as("id"), col("b").as("label")))
-      .groupBy("id").agg(min("label").as("label"))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // min label in the neighborhood, then pointer jumping (adopt
-      // one's label's label — collapses chains in O(log diameter)
-      // rounds instead of O(d)). Both steps live in ONE lazy plan with
-      // ONE materialization per round: `stepped` is evaluated twice
-      // inside the job (cheaper than a second eager checkpoint, which
-      // is a whole extra Spark job on a graph this shape).
-      val neighborMin = edges
-        .join(labels, edges("b") === labels("id"))
-        .groupBy(col("a").as("id2")).agg(min("label").as("nlabel"))
-      val stepped = labels.join(neighborMin,
-          labels("id") === col("id2"), "left")
-        .select(col("id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nlabel"), col("label")))
-            .as("label"))
-      val byLabel = stepped.select(col("id").as("lid"),
-        col("label").as("llabel"))
-      val updated = stepped.join(byLabel,
-          stepped("label") === byLabel("lid"), "left")
-        .select(col("id"), col("old"),
-          least(col("label"), coalesce(col("llabel"), col("label")))
-            .as("label"))
-        .localCheckpoint(false) // lazy: the count below materializes it
-      // convergence probe IS the materializing action — one Spark job
-      // per round, not a checkpoint job plus a count job
-      changed = updated.filter(col("label") =!= col("old")).count()
-      labels = updated.drop("old")
-      iter += 1
-    }
-    // a silent early exit would split components (two keep=true rows
-    // in one cluster) — a graph still changing after maxIter rounds
-    // has diameter ≫ 2^maxIter-pointer-jumping reach, so it hands off
-    // to the DOUBLING algorithm (large-star/small-star,
-    // [[ConnectedComponents.components]]), whose round count is
-    // O(log n) regardless of diameter
-    if (changed > 0) {
-      return ConnectedComponents.components(p.select("a", "b"))
-        .select(col("node").as("doc_id"),
-          col("component").as("cluster_rep"))
-        .withColumn("keep", col("doc_id") === col("cluster_rep"))
-    }
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_rep"))
+      localEdgeBound: Long = ConnectedComponents.LocalEdgeBound)
+      : DataFrame =
+    ConnectedComponents.resolve(
+        pairs.select(col("ai").as("a"), col("bi").as("b")), localEdgeBound)
+      .select(col("node").as("doc_id"), col("component").as("cluster_rep"))
       .withColumn("keep", col("doc_id") === col("cluster_rep"))
-  }
 
   /** INCREMENTAL [[resolveClusters]]: fold a new batch of near-dup
     * pairs into an ALREADY-RESOLVED corpus — the daily-reingest path,
@@ -858,36 +781,6 @@ object Dedup {
       newPairs.select(col("ai").as("a"), col("bi").as("b")))
       .select(col("node").as("doc_id"), col("component").as("cluster_rep"))
       .withColumn("keep", col("doc_id") === col("cluster_rep"))
-
-  /** The contracted-graph finish: union-find over a collected edge
-    * list. Same contract as the distributed loop — (doc_id,
-    * cluster_rep = component min, keep) for every node that appears in
-    * a pair.
-    */
-  private def resolveClustersLocal(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      // path halving
-      var c = x
-      while (parent.getOrElse(c, c) != r) {
-        val n = parent.getOrElse(c, c); parent(c) = r; c = n
-      }
-      r
-    }
-    es.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val nodes = es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
-    val out = nodes.toSeq.map(id => (id, find(id)))
-    spark.createDataset(out).toDF("doc_id", "cluster_rep")
-      .withColumn("keep", col("doc_id") === col("cluster_rep"))
-  }
 
   /** End-to-end near-dup dedup decision table: every doc in a near-dup
     * cluster with its representative and keep flag (docs in no cluster

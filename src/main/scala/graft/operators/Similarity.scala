@@ -193,9 +193,8 @@ object Similarity {
     * embedding-space near-duplicate removal. Pairs above the cosine
     * threshold come from the grid-blocked exact self-join
     * ([[blockedPairs]] — distributed, no BNLJ), connected components
-    * resolve through [[Dedup.resolveClusters]] (min-id label
-    * propagation with pointer jumping), and each component keeps its
-    * smallest vec_id; singletons are implicitly kept. This is the
+    * resolve through [[Dedup.resolveClusters]], and each component
+    * keeps its smallest vec_id; singletons are implicitly kept. This is the
     * embedding twin of [[Dedup.keptCorpus]] — dedup at the semantic
     * layer the text operators can't see. The oracle replays the
     * component rule as a recursive-CTE transitive closure (a node is
@@ -533,7 +532,7 @@ object Similarity {
     * connected components by [[Dedup.resolveClusters]] — every vector
     * in a near-dup cluster with its component-min representative and
     * keep flag. Same scale shape as the text-side dedup chain: the
-    * pair graph is ≪ the corpus, label propagation touches only pair
+    * pair graph is ≪ the corpus, cluster resolution touches only pair
     * nodes, and the corpus itself is scanned once by the pair stage.
     * The oracle replays the exact pair set declaratively and closes it
     * with a recursive-CTE transitive closure, so the distributed graph

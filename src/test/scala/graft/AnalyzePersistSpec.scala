@@ -27,24 +27,14 @@ class AnalyzePersistSpec extends SparkSpec {
       Tables.load(spark, sf, "lineitem"), m, "l_returnflag")
     assert(warm.isDefined, "lineitem did not resolve to catalog stats")
     // session 2: fresh SessionState (own conf, temp views, parser)
-    // over the same external catalog
+    // over the same external catalog (and the same SparkContext, whose
+    // jobs recordJobs sees)
     val s2 = spark.newSession()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    s2.sparkContext.addSparkListener(listener)
-    try {
-      val cold = Percentiles.statsFromCatalog(
-        Tables.load(s2, sf, "lineitem"), m, "l_returnflag")
-      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(s2, 30000L)
-      assert(cold === warm,
-        "fresh session resolved different stats than the analyzing one")
-      assert(jobs.get() === 0,
-        s"fresh-session routing ran ${jobs.get()} jobs — expected none")
-    } finally s2.sparkContext.removeSparkListener(listener)
+    val (cold, jobs) = recordJobs(Percentiles.statsFromCatalog(
+      Tables.load(s2, sf, "lineitem"), m, "l_returnflag"))
+    assert(cold === warm,
+      "fresh session resolved different stats than the analyzing one")
+    assert(jobs.sites.size === 0,
+      s"fresh-session routing ran ${jobs.sites.size} jobs — expected none")
   }
 }

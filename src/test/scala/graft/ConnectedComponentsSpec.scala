@@ -106,11 +106,11 @@ class ConnectedComponentsSpec extends SparkSpec {
       .components((base ++ batch).toDF("a", "b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == scratch)
-    // BOTH condensed-resolve branches agree (driver union-find is the
-    // batch-sized gate; bound 0 forces the distributed doubling loop)
+    // BOTH condensed-resolve routes agree (driver union-find is the
+    // batch-sized gate; bound 0 forces the star contraction)
     val gotDist = ConnectedComponents
       .mergeComponents(labels, batch.toDF("a", "b"),
-        localResolveBound = 0L)
+        localEdgeBound = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(gotDist == scratch)
     // and the incremental path genuinely merged: both chains share one rep
@@ -168,20 +168,41 @@ class ConnectedComponentsSpec extends SparkSpec {
       (20L, 10L, false)))
   }
 
-  test("resolveClusters hands an unconverged graph to the doubling algorithm") {
-    // pointer jumping's reach after r rounds is ~2^r, so no physical
-    // graph exhausts the default 50 — maxIter=2 forces the handoff on
-    // a 300-chain (reach ~8 ≪ 300), proving the fallback's column
-    // mapping and keep/drop decisions against the known answer
-    val pairs = (1L until 300L).map(i => (i, i + 1)).toDF("ai", "bi")
-    val want = (1L to 300L).map(n => (n, 1L, n == 1L)).toSet
-    for (iters <- Seq(2, 50)) { // forced fallback AND the normal path
-      val got = Dedup.resolveClusters(pairs, localEdgeLimit = 0L,
-          maxIter = iters)
+  test("resolveClusters: chain and clique known answers on both routes") {
+    // the chain's diameter is 299 (the contraction needs O(log n)
+    // rounds, the driver union-find one pass); the cliques are
+    // near-dup-shaped, many small dense clusters with ids scattered
+    // over the long range so cluster minima are not insertion order
+    val chain = (1L until 300L).map(i => (i, i + 1))
+    def id(x: Long): Long = (x * 0x9E3779B97F4A7C15L) & Long.MaxValue
+    val cliques = (0L until 4000L).map(c => (0L until 5L).map(m => id(c * 5 + m)))
+    assert(cliques.flatten.distinct.size == 20000)
+    val cases = Seq(
+      "chain" -> (chain,
+        (1L to 300L).map(n => (n, 1L, n == 1L)).toSet),
+      "cliques" -> (cliques.flatMap(ids =>
+          for (a <- ids; b <- ids if a < b) yield (a, b)),
+        cliques.flatMap(ids => ids.map(n => (n, ids.min, n == ids.min)))
+          .toSet))
+    for ((name, (pairs, want)) <- cases;
+         bound <- Seq(ConnectedComponents.LocalEdgeBound, 0L)) {
+      val got = Dedup.resolveClusters(pairs.toDF("ai", "bi"),
+          localEdgeBound = bound)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
         .toSet
-      assert(got == want, s"maxIter=$iters")
+      assert(got == want, s"$name, localEdgeBound=$bound")
     }
+  }
+
+  test("resolveClusters: the local route runs 4 jobs, its result's collect none") {
+    // the eager checkpoint, the size gate's count (two jobs) and the
+    // union-find's collect; the relabelled result is a local relation,
+    // so its collect starts none
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("ai", "bi")
+    Dedup.resolveClusters(pairs).collect() // warm
+    val (rows, jobs) = recordJobs(Dedup.resolveClusters(pairs).collect())
+    assert(rows.length == 5)
+    assert(jobs.sites.size == 4, jobs.sites.mkString("\n"))
   }
 
   test("q155: chain components match the analytic blocks") {

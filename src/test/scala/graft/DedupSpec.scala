@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{ConnectedComponents, Dedup}
 import graft.sources.Tables
 
 class DedupSpec extends SparkSpec {
@@ -467,11 +467,11 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     // two clusters: {1,2,3} via chain 1-2, 2-3; {10,11}
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("ai", "bi")
-    // both regimes must implement the same contract: the local
-    // union-find finish (default cutover) and the distributed
-    // min-label loop (forced by localEdgeLimit = 0)
-    for (limit <- Seq(4000000L, 0L)) {
-      val got = Dedup.resolveClusters(pairs, localEdgeLimit = limit)
+    // both routes must implement the same contract: the driver
+    // union-find (default bound) and the star contraction (forced by
+    // localEdgeBound = 0)
+    for (limit <- Seq(ConnectedComponents.LocalEdgeBound, 0L)) {
+      val got = Dedup.resolveClusters(pairs, localEdgeBound = limit)
         .collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
       assert(got(1L) == ((1L, true)), s"limit=$limit")
@@ -515,9 +515,9 @@ class DedupSpec extends SparkSpec {
   test("resolveClusters: local finish ≡ distributed loop on real pairs") {
     val pairs = Dedup.minhashPairs(spark, sf).select("ai", "bi")
     def run(limit: Long) =
-      Dedup.resolveClusters(pairs, localEdgeLimit = limit).collect()
+      Dedup.resolveClusters(pairs, localEdgeBound = limit).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(run(4000000L) == run(0L))
+    assert(run(ConnectedComponents.LocalEdgeBound) == run(0L))
   }
 
   test("dedupDecisions: every cluster keeps exactly one doc") {

@@ -625,23 +625,11 @@ class PlanSpec extends SparkSpec {
     assert(warm.isDefined, "lineitem did not resolve to catalog stats")
     // …after which the SAME resolution — the whole routing decision —
     // runs with ZERO Spark jobs
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val cold = Percentiles.statsFromCatalog(li, m, "l_returnflag")
-      // listener bus is async; drain deterministically before reading
-      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
-      assert(cold === warm)
-      assert(jobs.get() === 0,
-        s"catalog-stats routing ran ${jobs.get()} jobs — expected none")
-    } finally sc.removeSparkListener(listener)
+    val (cold, jobs) =
+      recordJobs(Percentiles.statsFromCatalog(li, m, "l_returnflag"))
+    assert(cold === warm)
+    assert(jobs.sites.size === 0,
+      s"catalog-stats routing ran ${jobs.sites.size} jobs — expected none")
     // the resolved numbers are the data's (not placeholder zeros)
     val s = warm.get("qty")
     assert(s.rows === li.count())
@@ -702,28 +690,6 @@ class PlanSpec extends SparkSpec {
       s"a-priori prune is not a broadcast semi-join:\n$plan")
   }
 
-  /** Run `body` and return the call site of every job it started (the
-    * result stage's name, e.g. "fold at ConnectedComponents.scala:N").
-    */
-  private def jobCallSites(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        sites.add(js.stageInfos.maxBy(_.stageId).name); ()
-      }
-    }
-    org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    sites.asScala.toSeq
-  }
-
   /** One curation-loop query, run to a noop sink the way the bench
     * runs it; the second of two runs is measured.
     */
@@ -731,7 +697,7 @@ class PlanSpec extends SparkSpec {
     def once(): Unit = SparkEntry.queries(name)(spark, sf)
       .write.format("noop").mode("overwrite").save()
     once()
-    jobCallSites(once())
+    recordJobs(once())._2.sites
   }
 
   test("q155: job budget, with the contraction's round count unchanged") {

@@ -109,31 +109,15 @@ class PrefixSumSpec extends SparkSpec {
   }
 
   test("broadcast route: the call runs one job, the frame no shuffle") {
-    import org.apache.spark.scheduler._
     val df = spark.range(0L, 1000L, 1L, 3)
       .select(col("id").as("k"), (col("id") % 7).as("x"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach(m =>
-          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
-    sc.addSparkListener(listener)
-    try {
-      val out = PrefixSum.withGlobalCumSum(df, "k", col("x"), "cum")
-      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
-      assert(jobs.get() === 1, s"the call ran ${jobs.get()} jobs")
-      val rows = out.collect()
-      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
-      assert(shuffled.get() === 0L,
-        s"executing the frame wrote ${shuffled.get()} shuffle bytes")
-      assert(rows.map(_.getLong(2)).max == (0L until 1000L).map(_ % 7).sum)
-    } finally sc.removeSparkListener(listener)
+    val (out, call) =
+      recordJobs(PrefixSum.withGlobalCumSum(df, "k", col("x"), "cum"))
+    assert(call.sites.size === 1, s"the call ran ${call.sites.size} jobs")
+    val (rows, exec) = recordJobs(out.collect())
+    val shuffled = call.shuffleBytes + exec.shuffleBytes
+    assert(shuffled === 0L,
+      s"executing the frame wrote $shuffled shuffle bytes")
+    assert(rows.map(_.getLong(2)).max == (0L until 1000L).map(_ % 7).sum)
   }
 }

@@ -20,6 +20,12 @@ object TestSpark {
   val sf: String = "/root/testdata/sf0.001"
 }
 
+/** The jobs a spec body started: each one's call site (the result
+  * stage's name, e.g. "fold at ConnectedComponents.scala:N") and the
+  * shuffle bytes their tasks wrote.
+  */
+case class JobRecord(sites: Seq[String], shuffleBytes: Long)
+
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
@@ -32,6 +38,34 @@ abstract class SparkSpec extends AnyFunSuite {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "-1")
     try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Run `body` under a job listener and return its value with the
+    * jobs it started. The listener bus is drained before the listener
+    * is added and again after the body, so the record holds exactly
+    * the body's jobs.
+    */
+  protected def recordJobs[T](body: => T): (T, JobRecord) = {
+    import org.apache.spark.scheduler._
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        sites.add(js.stageInfos.maxBy(_.stageId).name); ()
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m =>
+          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
+      import scala.jdk.CollectionConverters._
+      (out, JobRecord(sites.asScala.toSeq, shuffled.get()))
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Pre-order walk of an executed plan, descending through AQE's

@@ -3500,6 +3500,26 @@ class SummaryRewriteSpec extends SparkSpec {
     } finally OlapQueries.dropDeleteDemo(spark, sf)
   }
 
+  test("q192: the post-rebless read scans the summary only") {
+    // the route q192's query path reports on (it never throws)
+    OlapQueries.registerReblessDemo(spark, sf)
+    try {
+      val ps = scanPaths(OlapQueries.reblessQuery(spark, sf))
+      assert(OlapQueries.summaryOnly(ps),
+        s"post-rebless read must route onto the summary: $ps")
+    } finally OlapQueries.dropReblessDemo(spark, sf)
+  }
+
+  test("q193: the DDL-created summary serves the SQL read alone") {
+    // the route q193's query path reports on (it never throws)
+    OlapQueries.registerSqlDdlDemo(spark, sf)
+    try {
+      val ps = scanPaths(OlapQueries.sqlDdlQuery(spark, sf))
+      assert(OlapQueries.summaryOnly(ps),
+        s"the DDL-created summary must serve this read: $ps")
+    } finally OlapQueries.dropSqlDdlDemo(spark, sf)
+  }
+
   test("every demo fixture name carries the process id") {
     // the names key CWD-relative summary specs and table copies: two
     // JVMs in one directory must never share one
