@@ -360,13 +360,15 @@ object Dedup {
     * half the corpus lands in nobody's prefix.
     *
     * Scale shape: one df aggregate over exploded shingles (token-
-    * partitioned, mergeable), one join to order prefixes, one
-    * candidate join on prefix tokens, one verify join — all equality
-    * shuffles. Unlike the length-blocked [[ngramJaccardPairs]] this
-    * has no ±64-char reach limit, so it is exact for arbitrarily long
-    * documents; the prefix margin uses the same τ−1e-4 slack as the
-    * verifier, so no pair the round(j,4)≥τ output filter can accept is
-    * ever pruned.
+    * partitioned, mergeable), one prefix cut ([[prefixFrame]]: a
+    * projection under a broadcast df index while the df table is
+    * under the broadcast threshold, else a join and a regroup by doc),
+    * one candidate join on prefix tokens, one verify join — all
+    * equality shuffles. Unlike the length-blocked [[ngramJaccardPairs]]
+    * this has no ±64-char reach limit, so it is exact for arbitrarily
+    * long documents; the prefix margin uses the same τ−1e-4 slack as
+    * the verifier, so no pair the round(j,4)≥τ output filter can accept
+    * is ever pruned.
     */
   def prefixJaccardPairs(spark: SparkSession, sfDir: String,
       threshold: Double = 0.8): DataFrame = {
@@ -384,8 +386,8 @@ object Dedup {
       .groupBy("h").agg(count(lit(1)).as("df"))
 
     // persisted: BOTH sides of the candidate self-join read the prefix
-    // index — unpersisted, the df aggregate and the rare-first prefix
-    // grouping (the pipeline's two expensive exchanges) ran twice
+    // index — unpersisted, the df aggregate and the prefix cut (on the
+    // shuffle route, the regroup by doc) ran twice
     val prefix = prefixFrame(docs, dfreq, t).persist()
 
     // candidates: docs sharing ≥1 prefix token, with the size-ratio
@@ -405,27 +407,74 @@ object Dedup {
   }
 
   /** Each doc's PREFIX under the (df, h) rare-first total order: the
-    * (sz − ⌈t·sz⌉ + 1) rarest shingles. Shared by the one-shot
-    * [[prefixJaccardPairs]] and the incremental merge — completeness
-    * of the prefix filter needs only that BOTH sides of a candidate
-    * join rank tokens by ONE consistent total order, which is why the
-    * incremental path may pass yesterday's (stale) df table: the
-    * order key h → (df(h), h) stays a function, just not the freshest
-    * one. Tokens absent from `dfreq` rank df = 0 — rarest, so a
-    * batch-novel shingle always lands in its doc's prefix.
+    * (sz − ⌈t·sz⌉ + 1) rarest shingles, as (doc_id, sz, h) rows.
+    * Shared by the one-shot [[prefixJaccardPairs]] and the incremental
+    * merge — completeness of the prefix filter needs only that BOTH
+    * sides of a candidate join rank tokens by ONE consistent total
+    * order, which is why the incremental path may pass yesterday's
+    * (stale) df table: the order key h → (df(h), h) stays a function,
+    * just not the freshest one. Tokens absent from `dfreq` rank df = 0
+    * — rarest, so a batch-novel shingle always lands in its doc's
+    * prefix. Two routes, picked from the optimizer's `sizeInBytes` of
+    * `dfreq`:
+    *
+    * '''Broadcast route''' — the estimate is ≤
+    * `spark.sql.autoBroadcastJoinThreshold` (and that threshold is
+    * > 0, so −1 turns the route off, as it does broadcast joins): one
+    * job collects the (h, df) pairs, the driver sorts them by h, and
+    * they go out as one broadcast of two arrays. One projection over
+    * `docs` then binary-searches each token's df, sorts the doc's
+    * tokens by (df, h), keeps the prefix and explodes it — no join,
+    * no exchange. An estimate that is too low fails the collect at
+    * `spark.driver.maxResultSize`, as a mis-estimated broadcast join
+    * does.
+    *
+    * '''Shuffle route''' — a larger estimate: explode the tokens, left
+    * join them to `dfreq`, regroup them by doc to sort, then slice.
+    *
+    * Both routes return the same rows under the same schema.
     */
-  private def prefixFrame(docs: DataFrame, dfreq: DataFrame,
-      t: Double): DataFrame = docs
-    .select(col("doc_id"), col("sz"), explode(col("hss")).as("h"))
-    .join(dfreq, Seq("h"), "left")
-    .na.fill(0L, Seq("df"))
-    .groupBy(col("doc_id"), col("sz"))
-    .agg(array_sort(collect_list(struct(col("df"), col("h"))))
-      .as("ordered"))
-    .select(col("doc_id"), col("sz"),
-      explode(slice(col("ordered"), lit(1),
-        (col("sz") - ceil(col("sz") * t) + 1).cast("int"))).as("tok"))
-    .select(col("doc_id"), col("sz"), col("tok.h").as("h"))
+  private[graft] def prefixFrame(docs: DataFrame, dfreq: DataFrame,
+      t: Double): DataFrame = {
+    val threshold = docs.sparkSession.sessionState.conf
+      .autoBroadcastJoinThreshold
+    val small = threshold > 0 &&
+      dfreq.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+    val cut = (col("sz") - ceil(col("sz") * t) + 1).cast("int")
+    if (small) broadcastPrefix(docs, dfreq, cut)
+    else docs
+      .select(col("doc_id"), col("sz"), explode(col("hss")).as("h"))
+      .join(dfreq, Seq("h"), "left")
+      .na.fill(0L, Seq("df"))
+      .groupBy(col("doc_id"), col("sz"))
+      .agg(array_sort(collect_list(struct(col("df"), col("h"))))
+        .as("ordered"))
+      .select(col("doc_id"), col("sz"),
+        explode(slice(col("ordered"), lit(1), cut)).as("tok"))
+      .select(col("doc_id"), col("sz"), col("tok.h").as("h"))
+  }
+
+  /** [[prefixFrame]]'s broadcast route: `cut` is the prefix length. */
+  private def broadcastPrefix(docs: DataFrame, dfreq: DataFrame,
+      cut: Column): DataFrame = {
+    val pairs = dfreq.select(col("h"), col("df")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    // released by Spark's ContextCleaner once the frame is unreachable
+    val index = docs.sparkSession.sparkContext
+      .broadcast((pairs.map(_._1), pairs.map(_._2)))
+    val rareFirst = udf { (hss: Seq[Long], n: Int) =>
+      if (hss == null) Array.emptyLongArray
+      else {
+        val (hs, dfs) = index.value
+        hss.map { h =>
+          val i = java.util.Arrays.binarySearch(hs, h)
+          (if (i < 0) 0L else dfs(i), h)
+        }.sorted.iterator.take(n).map(_._2).toArray
+      }
+    }
+    docs.select(col("doc_id"), col("sz"),
+      explode(rareFirst(col("hss"), cut)).as("h"))
+  }
 
   // ---- incremental near-dup (prefix-filtered, exact) -------------------
 
@@ -437,7 +486,10 @@ object Dedup {
     * with its row count (`prefixRows`, the size statistic a search
     * gates its join strategy on). All three frames are eagerly
     * materialized ([[nearDupState]]), so a downstream merge reads
-    * stored blocks, never the corpus lineage.
+    * stored blocks, never the corpus lineage. Every prefix cut of a
+    * state — build, merge day, recut — runs [[prefixFrame]], which
+    * broadcasts `dfreq` while it is under the broadcast threshold, so
+    * the cut is one projection over `docs` with no exchange.
     */
   case class NearDupState(docs: DataFrame, dfreq: DataFrame,
       prefix: DataFrame, threshold: Double, prefixRows: Long)
@@ -669,9 +721,12 @@ object Dedup {
     * Scale shape: the same prefix inverted index as
     * [[prefixJaccardPairs]], cut at the search floor (a low floor
     * means long prefixes — the honest cost of exact low-similarity
-    * search). Each call builds the index ([[nearDupState]]); a
-    * caller holding a state could reuse it across probe batches, but
-    * this query does not. Candidates come from an equality join of
+    * search). Each call builds the index ([[nearDupState]]): a df
+    * aggregate, then a prefix cut that is one exchange-free projection
+    * while the df table is under the broadcast threshold
+    * ([[prefixFrame]]), else a join and a regroup by doc. A caller
+    * holding a state could reuse it across probe batches, but this
+    * query does not. Candidates come from an equality join of
     * probe prefixes against the index. The probe side is one doc in
     * `probeMod`, so while its expected size (index rows / `probeMod`,
     * counted by the state build) stays under [[BroadcastProbeRows]]

@@ -146,19 +146,43 @@ class DedupSpec extends SparkSpec {
       s"missed ${truth -- found}, extra ${found -- truth}")
   }
 
+  /** Run `f` on the default route — at these sizes `prefixFrame`
+    * broadcasts its df index — and again under [[withoutBroadcast]],
+    * where it explodes, joins and regroups; both must give the same
+    * value, which is returned.
+    */
+  private def onBothRoutes[T](f: => T): T = {
+    val viaBroadcast = f
+    val viaShuffle = withoutBroadcast(f)
+    assert(viaBroadcast == viaShuffle,
+      s"the two prefix routes differ:\n$viaBroadcast\n$viaShuffle")
+    viaBroadcast
+  }
+
+  /** A state's prefix index as a comparable (schema, sorted rows). */
+  private def prefixIndex(s: Dedup.NearDupState) = (s.prefix.schema,
+    s.prefix.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq)
+
+  private def pairSet(q: DataFrame): Set[(Long, Long)] =
+    q.select("ai", "bi").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("prefixJaccardPairs ≡ blocking-free brute force, equality-join plan") {
     val truth = bruteForcePairs(0.8).select("ai", "bi").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val q = Dedup.prefixJaccardPairs(spark, sf)
-    val found = q.select("ai", "bi").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val found = onBothRoutes {
+      val q = Dedup.prefixJaccardPairs(spark, sf)
+      val found = pairSet(q)
+      val plan = q.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+      assert(!plan.contains("CartesianProduct"), plan)
+      found
+    }
     // prefix filtering is exact (not probabilistic): the df-ordered
     // prefix lemma guarantees every j≥τ pair shares a prefix token
     assert(found == truth,
       s"missed ${truth -- found}, extra ${found -- truth}")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("incrementalNearDupPairs ≡ brute force restricted to batch-touching pairs") {
@@ -166,20 +190,26 @@ class DedupSpec extends SparkSpec {
       .filter(col("ai") % 5 === 0 || col("bi") % 5 === 0)
       .select("ai", "bi").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val q = Dedup.incrementalNearDupPairs(spark, sf)
-    val found = q.select("ai", "bi").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val found = onBothRoutes {
+      val q = Dedup.incrementalNearDupPairs(spark, sf)
+      val found = pairSet(q)
+      val plan = q.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+      assert(!plan.contains("CartesianProduct"), plan)
+      found
+    }
     // the merge is EXACT (prefix filter under the stale-df order is
     // still complete), so this is equality, not recall
     assert(found == truth,
       s"missed ${truth -- found}, extra ${found -- truth}")
     assert(truth.nonEmpty, "batch should touch planted near-dups")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("mergeNearDups: day-2 cost — corpus text is never re-shingled") {
+    onBothRoutes(dayTwoCost())
+  }
+
+  private def dayTwoCost() = {
     import spark.implicits._
     val acc = spark.sparkContext.longAccumulator("corpus-text-rows")
     val corpus = Tables.load(spark, sf, "documents")
@@ -193,10 +223,11 @@ class DedupSpec extends SparkSpec {
     val batch = Tables.load(spark, sf, "documents")
       .filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"), col("text"))
-    val merged = Dedup.mergeNearDups(state, batch).collect()
+    val merged = pairSet(Dedup.mergeNearDups(state, batch))
     assert(acc.value == readsDuringBuild,
       s"merge re-read ${acc.value - readsDuringBuild} corpus text rows")
     assert(merged.nonEmpty)
+    (merged, prefixIndex(state))
   }
 
   test("mergeNearDups finds pairs whose shingles are absent from the corpus df table") {
@@ -211,10 +242,10 @@ class DedupSpec extends SparkSpec {
       (10L, "red green blue cyan magenta yellow black white"),
       (15L, "red green blue cyan magenta yellow black grey"),
       (20L, "one two three four five six seven eight")).toDF("doc_id", "text")
-    val state = Dedup.nearDupState(corpus, threshold = 0.5)
-    val got = Dedup.mergeNearDups(state, batch)
-      .select("ai", "bi").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (got, _) = onBothRoutes {
+      val state = Dedup.nearDupState(corpus, threshold = 0.5)
+      (pairSet(Dedup.mergeNearDups(state, batch)), prefixIndex(state))
+    }
     // docs 10/15 share 5 of their 6+6 trigram shingles: j = 5/7 ≈ 0.714
     assert(got == Set((10L, 15L)), got.toString)
   }
@@ -223,22 +254,28 @@ class DedupSpec extends SparkSpec {
     val truth = bruteForcePairs(0.8)
       .select("ai", "bi").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val q = Dedup.multiDayNearDupPairs(spark, sf)
-    val found = q.select("ai", "bi").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val found = onBothRoutes {
+      val q = Dedup.multiDayNearDupPairs(spark, sf)
+      val found = pairSet(q)
+      // exactly once: the materialized frame has no duplicate pairs
+      assert(q.select("ai", "bi").count() == found.size)
+      val plan = q.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+      assert(!plan.contains("CartesianProduct"), plan)
+      found
+    }
     // each pair is found exactly once, on the day its later-arriving
     // endpoint lands — the union over days is the one-shot answer
     assert(found == truth,
       s"missed ${truth -- found}, extra ${found -- truth}")
     assert(truth.nonEmpty, "corpus should contain planted near-dups")
-    // exactly once: the materialized frame has no duplicate pairs
-    assert(q.select("ai", "bi").count() == found.size)
-    val plan = q.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("mergeAndAbsorb: no day re-reads any earlier day's text") {
+    onBothRoutes(noReread())
+  }
+
+  private def noReread() = {
     import spark.implicits._
     val acc = spark.sparkContext.longAccumulator("seen-text-rows")
     // instrument EVERY wave's text: each doc's text may be read during
@@ -256,10 +293,11 @@ class DedupSpec extends SparkSpec {
     p1.collect()
     assert(acc.value == n0 + n1,
       s"day 1 re-read earlier text: ${acc.value - n0 - n1} extra rows")
-    val (p2, _) = Dedup.mergeAndAbsorb(state, wave(2))
-    p2.collect()
+    val (p2, s2) = Dedup.mergeAndAbsorb(state, wave(2))
+    val got = (pairSet(p1), pairSet(p2))
     assert(acc.value == n0 + n1 + n2,
       s"day 2 re-read earlier text: ${acc.value - n0 - n1 - n2} extra rows")
+    (got, prefixIndex(s2))
   }
 
   test("mergeAndAbsorb: pinned-df ordering still finds dups between two later waves") {
@@ -278,13 +316,13 @@ class DedupSpec extends SparkSpec {
       (20L, "red green blue cyan magenta yellow black grey"),
       (21L, "one two three four five six seven eight")
     ).toDF("doc_id", "text")
-    var state = Dedup.nearDupState(day0, threshold = 0.5)
-    val (p1, s1) = Dedup.mergeAndAbsorb(state, day1)
-    state = s1
-    assert(p1.count() == 0)
-    val (p2, _) = Dedup.mergeAndAbsorb(state, day2)
-    val got = p2.select("ai", "bi").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (got, _) = onBothRoutes {
+      val state = Dedup.nearDupState(day0, threshold = 0.5)
+      val (p1, s1) = Dedup.mergeAndAbsorb(state, day1)
+      assert(p1.count() == 0)
+      val (p2, s2) = Dedup.mergeAndAbsorb(s1, day2)
+      (pairSet(p2), prefixIndex(s2))
+    }
     assert(got == Set((10L, 20L)), got.toString)
   }
 
@@ -314,21 +352,22 @@ class DedupSpec extends SparkSpec {
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "alpha beta gamma delta epsilon zeta eta iota"))
       .toDF("doc_id", "text")
-    val state = Dedup.nearDupState(corpus, threshold = 0.5)
     // a crawler retry re-delivers doc 1 alongside a genuinely new doc
     val retry = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (3L, "alpha beta gamma delta epsilon zeta eta kappa"))
       .toDF("doc_id", "text")
-    val (pairs, next) = Dedup.mergeAndAbsorb(state, retry)
-    val got = pairs.select("ai", "bi").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (got, _) = onBothRoutes {
+      val state = Dedup.nearDupState(corpus, threshold = 0.5)
+      val (pairs, next) = Dedup.mergeAndAbsorb(state, retry)
+      assert(pairs.count() == 2)
+      assert(next.docs.count() == 3) // 1 absorbed once, not twice
+      assert(next.docs.select("doc_id").distinct().count() == 3)
+      (pairSet(pairs), prefixIndex(next))
+    }
     // doc 1 is already stored: no (1,1) self-pair, no duplicate rows —
     // only the new doc's pairs surface
     assert(got == Set((1L, 3L), (2L, 3L)), got.toString)
-    assert(pairs.count() == 2)
-    assert(next.docs.count() == 3) // 1 absorbed once, not twice
-    assert(next.docs.select("doc_id").distinct().count() == 3)
   }
 
   test("mergeAndAbsorb: an empty batch is a no-op day") {
@@ -337,19 +376,20 @@ class DedupSpec extends SparkSpec {
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "alpha beta gamma delta epsilon zeta eta iota"))
       .toDF("doc_id", "text")
-    val state = Dedup.nearDupState(corpus, threshold = 0.5)
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val (pairs, next) = Dedup.mergeAndAbsorb(state, empty)
-    assert(pairs.count() == 0)
-    // state passes through structurally: same docs, same index rows
-    assert(next.docs.count() == state.docs.count())
-    assert(next.prefix.count() == state.prefix.count())
-    // and tomorrow still works against it
     val day2 = Seq((3L, "alpha beta gamma delta epsilon zeta eta kappa"))
       .toDF("doc_id", "text")
-    val got = Dedup.mergeAndAbsorb(next, day2)._1
-      .select("ai", "bi").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (got, _) = onBothRoutes {
+      val state = Dedup.nearDupState(corpus, threshold = 0.5)
+      val (pairs, next) = Dedup.mergeAndAbsorb(state, empty)
+      assert(pairs.count() == 0)
+      // state passes through structurally: same docs, same index rows
+      assert(next.docs.count() == state.docs.count())
+      assert(prefixIndex(next) == prefixIndex(state))
+      // and tomorrow still works against it
+      val (p2, s2) = Dedup.mergeAndAbsorb(next, day2)
+      (pairSet(p2), prefixIndex(s2))
+    }
     assert(got == Set((1L, 3L), (2L, 3L)), got.toString)
   }
 
@@ -371,6 +411,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("recutState: compaction re-reads no text, refreshes df, and preserves answers") {
+    onBothRoutes(compaction())
+  }
+
+  private def compaction() = {
     import spark.implicits._
     val acc = spark.sparkContext.longAccumulator("text-rows")
     def waved(w: Int): DataFrame = Tables.load(spark, sf, "documents")
@@ -397,6 +441,42 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(after == before)
     assert(before.nonEmpty)
+    (after, prefixIndex(state), prefixIndex(recut))
+  }
+
+  test("prefixFrame: novel shingles rank df = 0, df ties break on h") {
+    import spark.implicits._
+    // the pinned df table never saw 9; 2, 3, 5 and −7 tie at df 3
+    val dfreq = Seq((1L, 5L), (2L, 3L), (3L, 3L), (4L, 1L), (5L, 3L),
+      (-7L, 3L)).toDF("h", "df")
+    val docs = Seq(
+      (1L, Seq(1L, 2L, 3L, 4L, 9L)), // cut 3: 9 (df 0), 4, then 2 < 3
+      (2L, Seq(2L, 3L, 5L)),         // cut 2 inside the tie: 2, 3
+      (3L, Seq(-7L, 2L, 3L)))        // signed order: −7 first
+      .toDF("doc_id", "hss").withColumn("sz", size(col("hss")))
+    val got = onBothRoutes {
+      val p = Dedup.prefixFrame(docs, dfreq, 0.5 - 1e-4)
+      (p.schema, p.collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq)
+    }
+    assert(got._2 == Seq((1L, 5, 2L), (1L, 5, 4L), (1L, 5, 9L),
+      (2L, 3, 2L), (2L, 3, 3L), (3L, 3, -7L), (3L, 3, 2L)), got.toString)
+  }
+
+  test("prefixFrame: null and empty text, and a whole-array short prefix") {
+    import spark.implicits._
+    val corpus = Seq[(Long, String)](
+      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, null), (3L, ""), (4L, "red green blue cyan"))
+      .toDF("doc_id", "text")
+    val (_, rows) = onBothRoutes(prefixIndex(
+      Dedup.nearDupState(corpus, threshold = 0.1)))
+    val byDoc = rows.groupBy(_._1)
+    assert(!byDoc.contains(2L), "a null text has no shingles to index")
+    // at threshold 0.1 a doc of ≤ 10 shingles keeps all of them
+    assert(byDoc(1L).map(_._3).size == 6 && byDoc(4L).map(_._3).size == 2,
+      rows.toString)
+    byDoc.values.foreach(ts => assert(ts.size == ts.head._2, rows.toString))
   }
 
   test("jaccardTopK ≡ per-probe brute-force ranking; bounded-aggregate plan") {

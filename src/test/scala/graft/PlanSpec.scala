@@ -712,7 +712,7 @@ class PlanSpec extends SparkSpec {
 
   test("q170: broadcast probe prefix keeps the job budget") {
     val sites = curationJobs("q170_jaccard_search")
-    assert(sites.size <= 13,
+    assert(sites.size <= 12,
       s"q170 ran ${sites.size} jobs:\n${sites.mkString("\n")}")
     // the probe side broadcasts: the index streams through the
     // candidate join unshuffled
@@ -737,6 +737,31 @@ class PlanSpec extends SparkSpec {
     assert(b.schema === f.schema)
     assert(b.collect().toSeq === f.collect().toSeq)
     assert(b.collect().toSeq === df.collect().toSeq)
+  }
+
+  test("prefixFrame: the broadcast df index cuts prefixes without an exchange") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    val state = graft.operators.Dedup.nearDupState(
+      graft.sources.Tables.load(spark, sf, "documents")
+        .select(col("doc_id"), col("text")))
+    def exchanges(): Int = {
+      val p = graft.operators.Dedup.prefixFrame(state.docs, state.dfreq,
+        state.threshold - 1e-4)
+      p.collect()
+      allPlanNodes(p.queryExecution.executedPlan)
+        .count(_.isInstanceOf[ShuffleExchangeExec])
+    }
+    assert(exchanges() == 0, "the broadcast route shuffled")
+    assert(withoutBroadcast(exchanges()) > 0,
+      "the shuffle route ran without an exchange")
+  }
+
+  test("q168: job budget for three prefix cuts") {
+    val sites = curationJobs("q168_multiday_neardup")
+    // 34 when each cut explodes, joins and regroups its tokens
+    assert(sites.size <= 25,
+      s"q168 ran ${sites.size} jobs:\n${sites.mkString("\n")}")
   }
 
   test("q147: packed and two-column pair plans share one output schema") {

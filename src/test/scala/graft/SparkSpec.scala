@@ -31,7 +31,8 @@ abstract class SparkSpec extends AnyFunSuite {
   def sf: String = TestSpark.sf
 
   /** Run `f` with `spark.sql.autoBroadcastJoinThreshold` = −1, restored
-    * after: broadcast joins off, and PrefixSum on its shard route.
+    * after: broadcast joins off, PrefixSum on its shard route, and
+    * `Dedup.prefixFrame` on its explode/join/regroup route.
     */
   protected def withoutBroadcast[T](f: => T): T = {
     val key = "spark.sql.autoBroadcastJoinThreshold"

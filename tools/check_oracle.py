@@ -5,13 +5,16 @@ Usage: python3 tools/check_oracle.py <verifyOutDir> <sfDir>
 
 Runs each oracle_sql.json entry in DuckDB against the sfDir parquet
 tables, loads the Spark-written parquet from <verifyOutDir>/<name>/,
-sorts columns by name, sorts rows, and compares values. Dev tool only —
+sorts columns by name, sorts rows, and compares values. Each oracle's
+DuckDB wall time is printed on its PASS/FAIL line, and their total at
+the end. Dev tool only —
 NOT part of the library (the driver has its own copy of this logic).
 """
 import glob
 import json
 import math
 import sys
+import time
 
 import duckdb
 
@@ -33,6 +36,7 @@ def main(out_dir, sf_dir):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    oracle_s = 0.0
     import os
     # manifest of queries Verify ATTEMPTED: absent-from-manifest means
     # a deliberate SPARK_GRAFT_ONLY subset (skip); attempted-but-no-
@@ -68,17 +72,24 @@ def main(out_dir, sf_dir):
                 print(json.dumps(failures[name], indent=2))
             n_fail += 1
             continue
+        t0 = time.perf_counter()
         try:
-            odf = con.sql(sql).df()
+            odf, err = con.sql(sql).df(), None
         except Exception as e:
-            print(f"FAIL {name}: oracle SQL error: {e}")
+            odf, err = None, e
+        took = time.perf_counter() - t0
+        oracle_s += took
+        timed = f"oracle {took:.2f} s"
+        if err is not None:
+            print(f"FAIL {name}: oracle SQL error: {err} ({timed})")
             n_fail += 1
             continue
         sdf = con.sql(
             f"SELECT * FROM read_parquet({files!r})").df()
         ocols, scols = sorted(odf.columns), sorted(sdf.columns)
         if ocols != scols:
-            print(f"FAIL {name}: schema {scols} vs oracle {ocols}")
+            print(f"FAIL {name}: schema {scols} vs oracle {ocols}"
+                  f" ({timed})")
             n_fail += 1
             continue
         orows = sorted([tuple(norm(v) for v in r)
@@ -86,17 +97,18 @@ def main(out_dir, sf_dir):
         srows = sorted([tuple(norm(v) for v in r)
                         for r in sdf[ocols].itertuples(index=False)])
         if len(orows) != len(srows):
-            print(f"FAIL {name}: rows {len(srows)} vs oracle {len(orows)}")
+            print(f"FAIL {name}: rows {len(srows)} vs oracle {len(orows)}"
+                  f" ({timed})")
             n_fail += 1
         elif orows != srows:
             diff = [(s, o) for s, o in zip(srows, orows) if s != o]
             print(f"FAIL {name}: {len(diff)} mismatched rows; first: "
-                  f"spark={diff[0][0]} oracle={diff[0][1]}")
+                  f"spark={diff[0][0]} oracle={diff[0][1]} ({timed})")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(srows)} rows)")
+            print(f"PASS {name} ({len(srows)} rows, {timed})")
             n_pass += 1
-    print(f"== {n_pass} pass, {n_fail} fail ==")
+    print(f"== {n_pass} pass, {n_fail} fail, oracles {oracle_s:.2f} s ==")
     return 1 if n_fail else 0
 
 
