@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -40,12 +40,22 @@ object CacheRelease {
   /** Executions that do not read the cache before a listener gives up. */
   val MaxMisses: Int = 100
 
+  /** How long registration waits for queued listener events. */
+  private val DrainTimeoutMs: Long = 10000L
+
   def afterFirstUse(cached: DataFrame): DataFrame = {
     val spark = cached.sparkSession
     val builder = cached.queryExecution.withCachedData.collectFirst {
       case r: InMemoryRelation => r.cacheBuilder
     }
     builder.foreach { b =>
+      // an action that already returned has only QUEUED its execution
+      // end on the async listener bus; a listener added before that
+      // event is delivered would count the caller's internal action as
+      // the consumer and release the cache at once. Drain first, so
+      // the listener sees only executions that end after this call.
+      try GraftColumnBridge.drainListenerBus(spark, DrainTimeoutMs)
+      catch { case _: java.util.concurrent.TimeoutException => () }
       val listener: QueryExecutionListener = new QueryExecutionListener {
         private var misses = 0
         private def maybeRelease(qe: QueryExecution): Unit = {

@@ -57,6 +57,31 @@ class CacheReleaseSpec extends SparkSpec {
     base.unpersist(false)
   }
 
+  test("an internal action still queued on the bus does not release") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
+    import spark.implicits._
+    // holds the bus on each job end, so the materializing count's
+    // execution end is still queued when the listener is registered
+    val slow = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Thread.sleep(300)
+    }
+    drain()
+    spark.sparkContext.addSparkListener(slow)
+    val base = (1 to 100).toDF("x").persist()
+    try {
+      base.count() // the operator's internal action
+      graft.plans.CacheRelease.afterFirstUse(base)
+      drain()
+      assert(base.storageLevel != StorageLevel.NONE,
+        "the internal action's late event released the cache")
+    } finally spark.sparkContext.removeSparkListener(slow)
+    base.select($"x" + 1).count() // the real consumer
+    drain()
+    assert(base.storageLevel == StorageLevel.NONE,
+      "the consuming action failed to release the cache")
+  }
+
   test("two lazy-return queries back-to-back leave no cache behind") {
     // q24 and q70 both persist intermediates and return LAZY frames —
     // the exact r13 leak shape. Consume each, then assert the queries
