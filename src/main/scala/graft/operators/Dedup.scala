@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.functions.SimHashFunctions.simhash64
 import graft.sources.Tables
 
@@ -359,12 +360,13 @@ object Dedup {
     * ordering is what bounds the hot-token blowup: a shingle shared by
     * half the corpus lands in nobody's prefix.
     *
-    * Scale shape: one df aggregate over exploded shingles (token-
-    * partitioned, mergeable), one prefix cut ([[prefixFrame]]: a
-    * projection under a broadcast df index while the df table is
-    * under the broadcast threshold, else a join and a regroup by doc),
-    * one candidate join on prefix tokens, one verify join — all
-    * equality shuffles. Unlike the length-blocked [[ngramJaccardPairs]]
+    * Scale shape: one df count ([[docFrequencies]]: one job merged on
+    * the driver while the df table is under the broadcast threshold,
+    * else an aggregate over exploded shingles — token-partitioned,
+    * mergeable), one prefix cut ([[prefixFrame]]: a projection under a
+    * broadcast df index while the df table is under the broadcast
+    * threshold, else a join and a regroup by doc), one candidate join
+    * on prefix tokens, one verify join — all equality shuffles. Unlike the length-blocked [[ngramJaccardPairs]]
     * this has no ±64-char reach limit, so it is exact for arbitrarily
     * long documents; the prefix margin uses the same τ−1e-4 slack as
     * the verifier, so no pair the round(j,4)≥τ output filter can accept
@@ -379,16 +381,15 @@ object Dedup {
       .select(col("doc_id"),
         array_sort(shingleHashes(col("text"))).as("hss"))
       .withColumn("sz", size(col("hss")))
-      .persist() // read by df agg, prefix build, and both verify sides
+      .persist() // read by the df count, prefix build, both verify sides
 
     // global document frequency per shingle — the rare-first key
-    val dfreq = docs.select(explode(col("hss")).as("h"))
-      .groupBy("h").agg(count(lit(1)).as("df"))
+    val (dfreq, dfRows) = docFrequencies(docs)
 
     // persisted: BOTH sides of the candidate self-join read the prefix
-    // index — unpersisted, the df aggregate and the prefix cut (on the
-    // shuffle route, the regroup by doc) ran twice
-    val prefix = prefixFrame(docs, dfreq, t).persist()
+    // index — unpersisted, the prefix cut (on the shuffle route, the
+    // regroup by doc) ran twice
+    val prefix = prefixFrame(docs, dfreq, dfRows, t).persist()
 
     // candidates: docs sharing ≥1 prefix token, with the size-ratio
     // prune (J ≤ min/max) applied inside the join
@@ -406,6 +407,121 @@ object Dedup {
       "ai", "bi")
   }
 
+  /** Bytes one (h, df) entry of a df table takes as two long arrays:
+    * the unit of [[docFrequencies]]' bound and [[prefixFrame]]'s gate.
+    */
+  private val DfEntryBytes = 16L
+
+  /** Document frequency of every shingle of `docs` (doc_id, hss, sz)
+    * as (h, df) rows, df counting each array element as `explode`
+    * does, with the table's exact row count. Two routes, bounded by
+    * `spark.sql.autoBroadcastJoinThreshold`:
+    *
+    * '''Driver route''' — one job, no exchange: each task counts its
+    * partition's hashes into a primitive long → long map, reading
+    * `InternalRow`s, and returns the map as two arrays — or an
+    * overflow marker once it holds more than its share (threshold /
+    * 16 B / partitions) of entries. With no overflow the driver merges
+    * the partials, so the table holds at most threshold / 16 B
+    * entries, and returns them sorted by h as a local relation:
+    * collecting it later runs no job.
+    *
+    * '''Aggregate route''' — any overflow, or a threshold ≤ 0 (−1
+    * turns the driver route off, as it does broadcast joins): explode,
+    * group by h and localCheckpoint, the row count observed on the
+    * checkpoint's own job.
+    *
+    * Both routes return the same rows under the same schema.
+    */
+  private[graft] def docFrequencies(docs: DataFrame): (DataFrame, Long) = {
+    val spark = docs.sparkSession
+    val aggregate = docs.select(explode(col("hss")).as("h"))
+      .groupBy("h").agg(count(lit(1)).as("df"))
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val counted =
+      if (threshold > 0) countOnDriver(docs, threshold / DfEntryBytes)
+      else None
+    counted match {
+      case Some((hs, dfs)) =>
+        val rows = hs.indices.map(i => Row(hs(i), dfs(i)))
+        (spark.createDataFrame(rows.asJava, aggregate.schema),
+          hs.length.toLong)
+      case None => checkpointCounted(aggregate)
+    }
+  }
+
+  /** [[docFrequencies]]' driver route: (h, df) arrays sorted by h, or
+    * None when a task passed its share of `maxEntries`.
+    */
+  private def countOnDriver(docs: DataFrame,
+      maxEntries: Long): Option[(Array[Long], Array[Long])] = {
+    val hashes = docs.select(col("hss")).queryExecution.toRdd
+    val share = maxEntries / math.max(1, hashes.getNumPartitions)
+    val partials = hashes.mapPartitions { rows =>
+      val counts = new LongCounts
+      while (counts.size <= share && rows.hasNext) {
+        val row = rows.next()
+        if (!row.isNullAt(0)) {
+          val hss = row.getArray(0)
+          var i = 0
+          while (i < hss.numElements()) {
+            counts.add(hss.getLong(i), 1L); i += 1
+          }
+        }
+      }
+      Iterator.single(Option.when(counts.size <= share)(counts.sorted))
+    }.collect()
+    if (partials.contains(None)) None
+    else {
+      val merged = new LongCounts
+      partials.flatten.foreach { case (hs, dfs) =>
+        hs.indices.foreach(i => merged.add(hs(i), dfs(i)))
+      }
+      Some(merged.sorted)
+    }
+  }
+
+  /** Open-addressing long → count map over two primitive arrays, for
+    * [[countOnDriver]]: linear probing, a zero count marking a free
+    * slot (every stored count is ≥ 1), doubled at half load.
+    */
+  private final class LongCounts {
+    private var keys = new Array[Long](1024)
+    private var counts = new Array[Long](1024)
+    var size = 0
+
+    /** The slot holding `k`, or the free slot where it would go. */
+    private def slot(k: Long): Int = {
+      val mask = keys.length - 1
+      var i = java.lang.Long.hashCode(k * 0x9e3779b97f4a7c15L) & mask
+      while (counts(i) != 0L && keys(i) != k) i = (i + 1) & mask
+      i
+    }
+
+    def add(k: Long, c: Long): Unit = {
+      val i = slot(k)
+      if (counts(i) == 0L) { keys(i) = k; size += 1 }
+      counts(i) += c
+      if (2 * size > keys.length) {
+        val (ks, cs) = (keys, counts)
+        keys = new Array[Long](2 * ks.length)
+        counts = new Array[Long](2 * ks.length)
+        ks.indices.foreach { j =>
+          if (cs(j) != 0L) {
+            val s = slot(ks(j)); keys(s) = ks(j); counts(s) = cs(j)
+          }
+        }
+      }
+    }
+
+    /** The entries as (keys, counts) arrays, sorted by key. */
+    def sorted: (Array[Long], Array[Long]) = {
+      val ks = keys.indices.filter(counts(_) != 0L).map(keys(_)).toArray
+      java.util.Arrays.sort(ks)
+      (ks, ks.map(k => counts(slot(k))))
+    }
+  }
+
   /** Each doc's PREFIX under the (df, h) rare-first total order: the
     * (sz − ⌈t·sz⌉ + 1) rarest shingles, as (doc_id, sz, h) rows.
     * Shared by the one-shot [[prefixJaccardPairs]] and the incremental
@@ -415,31 +531,30 @@ object Dedup {
     * (stale) df table: the order key h → (df(h), h) stays a function,
     * just not the freshest one. Tokens absent from `dfreq` rank df = 0
     * — rarest, so a batch-novel shingle always lands in its doc's
-    * prefix. Two routes, picked from the optimizer's `sizeInBytes` of
-    * `dfreq`:
+    * prefix. Two routes, picked from `dfRows`, the df table's exact
+    * row count ([[docFrequencies]] returns it):
     *
-    * '''Broadcast route''' — the estimate is ≤
+    * '''Broadcast route''' — `dfRows` × 16 B is ≤
     * `spark.sql.autoBroadcastJoinThreshold` (and that threshold is
-    * > 0, so −1 turns the route off, as it does broadcast joins): one
-    * job collects the (h, df) pairs, the driver sorts them by h, and
-    * they go out as one broadcast of two arrays. One projection over
-    * `docs` then binary-searches each token's df, sorts the doc's
+    * > 0, so −1 turns the route off, as it does broadcast joins): the
+    * (h, df) pairs are collected (no job when `dfreq` is
+    * [[docFrequencies]]' local relation), the driver sorts them by h,
+    * and they go out as one broadcast of two arrays. One projection
+    * over `docs` then binary-searches each token's df, sorts the doc's
     * tokens by (df, h), keeps the prefix and explodes it — no join,
-    * no exchange. An estimate that is too low fails the collect at
-    * `spark.driver.maxResultSize`, as a mis-estimated broadcast join
-    * does.
+    * no exchange. The gate reads a count, not an optimizer estimate,
+    * so a df table larger than the threshold is never collected.
     *
-    * '''Shuffle route''' — a larger estimate: explode the tokens, left
+    * '''Shuffle route''' — a larger table: explode the tokens, left
     * join them to `dfreq`, regroup them by doc to sort, then slice.
     *
     * Both routes return the same rows under the same schema.
     */
   private[graft] def prefixFrame(docs: DataFrame, dfreq: DataFrame,
-      t: Double): DataFrame = {
+      dfRows: Long, t: Double): DataFrame = {
     val threshold = docs.sparkSession.sessionState.conf
       .autoBroadcastJoinThreshold
-    val small = threshold > 0 &&
-      dfreq.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+    val small = threshold > 0 && dfRows * DfEntryBytes <= threshold
     val cut = (col("sz") - ceil(col("sz") * t) + 1).cast("int")
     if (small) broadcastPrefix(docs, dfreq, cut)
     else docs
@@ -482,34 +597,40 @@ object Dedup {
     * stores between daily runs so corpus text is never re-shingled:
     * the prepared per-doc shingle arrays (`docs`: doc_id, hss, sz),
     * the shingle document frequencies (`dfreq`: h, df — the rare-first
-    * ordering key), and the prefix index (`prefix`: doc_id, sz, h)
-    * with its row count (`prefixRows`, the size statistic a search
-    * gates its join strategy on). All three frames are eagerly
-    * materialized ([[nearDupState]]), so a downstream merge reads
-    * stored blocks, never the corpus lineage. Every prefix cut of a
-    * state — build, merge day, recut — runs [[prefixFrame]], which
-    * broadcasts `dfreq` while it is under the broadcast threshold, so
-    * the cut is one projection over `docs` with no exchange.
+    * ordering key) with their exact row count (`dfRows`, the statistic
+    * every prefix cut gates on), and the prefix index (`prefix`:
+    * doc_id, sz, h) with its row count (`prefixRows`, the size
+    * statistic a search gates its join strategy on). All three frames
+    * are materialized ([[nearDupState]]): `docs` and `prefix` as
+    * checkpoints, `dfreq` as [[docFrequencies]]' local relation or
+    * checkpoint, so a downstream merge reads stored rows, never the
+    * corpus lineage. Every prefix cut of a state — build, merge day,
+    * recut — runs [[prefixFrame]], which broadcasts `dfreq` while
+    * `dfRows` × 16 B is under the broadcast threshold, so the cut is
+    * one projection over `docs` with no exchange.
     */
   case class NearDupState(docs: DataFrame, dfreq: DataFrame,
-      prefix: DataFrame, threshold: Double, prefixRows: Long)
+      prefix: DataFrame, threshold: Double, prefixRows: Long,
+      dfRows: Long)
 
-  /** Eager localCheckpoint of a prefix index, returning its row count
-    * too. The count is an observed metric of the checkpoint's own job,
-    * so it costs no extra job.
+  /** Eager localCheckpoint of a frame, returning its row count too.
+    * The count is an observed metric of the checkpoint's own job, so
+    * it costs no extra job.
     */
-  private def checkpointPrefix(prefix: DataFrame): (DataFrame, Long) = {
+  private def checkpointCounted(frame: DataFrame): (DataFrame, Long) = {
     val rows = org.apache.spark.sql.Observation()
-    val stored = prefix.observe(rows, count(lit(1)).as("n"))
+    val stored = frame.observe(rows, count(lit(1)).as("n"))
       .localCheckpoint(true)
     (stored, rows.get("n").asInstanceOf[Long])
   }
 
   /** Build [[NearDupState]] from a (doc_id, text) corpus frame — the
     * one-time (or yesterday's) pass: shingle every doc once, count
-    * document frequencies, cut each doc's rare-first prefix. At 100 TB
-    * these land in stored tables; here localCheckpoint is the
-    * stored-table shape (eager, lineage-free).
+    * document frequencies ([[docFrequencies]]: one job and no exchange
+    * while the df table is under the broadcast threshold), cut each
+    * doc's rare-first prefix. At 100 TB these land in stored tables;
+    * here localCheckpoint is the stored-table shape (eager,
+    * lineage-free).
     */
   def nearDupState(corpusText: DataFrame,
       threshold: Double = 0.8): NearDupState = {
@@ -519,11 +640,10 @@ object Dedup {
         array_sort(shingleHashes(col("text"))).as("hss"))
       .withColumn("sz", size(col("hss")))
       .localCheckpoint(true)
-    val dfreq = docs.select(explode(col("hss")).as("h"))
-      .groupBy("h").agg(count(lit(1)).as("df"))
-      .localCheckpoint(true)
-    val (prefix, prefixRows) = checkpointPrefix(prefixFrame(docs, dfreq, t))
-    NearDupState(docs, dfreq, prefix, threshold, prefixRows)
+    val (dfreq, dfRows) = docFrequencies(docs)
+    val (prefix, prefixRows) =
+      checkpointCounted(prefixFrame(docs, dfreq, dfRows, t))
+    NearDupState(docs, dfreq, prefix, threshold, prefixRows, dfRows)
   }
 
   /** INCREMENTAL near-dup: every exact-Jaccard-≥ threshold pair with
@@ -558,7 +678,7 @@ object Dedup {
   /** (doc_id, hss sorted, sz) — the per-doc shape every pair path
     * verifies against.
     */
-  private def shingledDocs(text: DataFrame): DataFrame = text
+  private[graft] def shingledDocs(text: DataFrame): DataFrame = text
     .select(col("doc_id"),
       array_sort(shingleHashes(col("text"))).as("hss"))
     .withColumn("sz", size(col("hss")))
@@ -640,11 +760,12 @@ object Dedup {
       state.docs.select(col("doc_id")), Seq("doc_id"), "left_anti")
     val batchDocs = shingledDocs(fresh).localCheckpoint(true)
     val (batchPrefix, batchRows) =
-      checkpointPrefix(prefixFrame(batchDocs, state.dfreq, t))
+      checkpointCounted(
+        prefixFrame(batchDocs, state.dfreq, state.dfRows, t))
     val pairs = mergePairs(state, batchDocs, batchPrefix)
     val next = NearDupState(state.docs.unionAll(batchDocs),
       state.dfreq, state.prefix.unionAll(batchPrefix), state.threshold,
-      state.prefixRows + batchRows)
+      state.prefixRows + batchRows, state.dfRows)
     (pairs, next)
   }
 
@@ -656,7 +777,9 @@ object Dedup {
     * filter admits more candidates than it must (never fewer — see
     * [[mergeAndAbsorb]]); a periodic recut restores pruning
     * efficiency and re-establishes a single up-to-date total order
-    * for the next run of days. Results are invariant: both orderings
+    * for the next run of days. The re-count is [[docFrequencies]]:
+    * one job and no exchange while the df table is under the
+    * broadcast threshold. Results are invariant: both orderings
     * are complete, so [[selfPairs]]/[[mergeNearDups]] answers are
     * identical before and after (spec-proven). Passing a lower
     * `threshold` than the state's is also the supported way to widen
@@ -667,12 +790,10 @@ object Dedup {
       threshold: Double = Double.NaN): NearDupState = {
     val cut = if (threshold.isNaN) state.threshold else threshold
     val t = cut - 1e-4
-    val dfreq = state.docs.select(explode(col("hss")).as("h"))
-      .groupBy("h").agg(count(lit(1)).as("df"))
-      .localCheckpoint(true)
+    val (dfreq, dfRows) = docFrequencies(state.docs)
     val (prefix, prefixRows) =
-      checkpointPrefix(prefixFrame(state.docs, dfreq, t))
-    NearDupState(state.docs, dfreq, prefix, cut, prefixRows)
+      checkpointCounted(prefixFrame(state.docs, dfreq, dfRows, t))
+    NearDupState(state.docs, dfreq, prefix, cut, prefixRows, dfRows)
   }
 
   /** q168: the multi-day protocol end to end, proving the incremental
@@ -722,9 +843,9 @@ object Dedup {
     * [[prefixJaccardPairs]], cut at the search floor (a low floor
     * means long prefixes — the honest cost of exact low-similarity
     * search). Each call builds the index ([[nearDupState]]): a df
-    * aggregate, then a prefix cut that is one exchange-free projection
-    * while the df table is under the broadcast threshold
-    * ([[prefixFrame]]), else a join and a regroup by doc. A caller
+    * count and then a prefix cut, each exchange-free while the df
+    * table is under the broadcast threshold ([[docFrequencies]],
+    * [[prefixFrame]]), else an aggregate, a join and a regroup by doc. A caller
     * holding a state could reuse it across probe batches, but this
     * query does not. Candidates come from an equality join of
     * probe prefixes against the index. The probe side is one doc in

@@ -164,6 +164,18 @@ class DedupSpec extends SparkSpec {
     s.prefix.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq)
 
+  /** A state's df table as a comparable (schema, sorted rows), checked
+    * against the row count the state carries.
+    */
+  private def dfIndex(s: Dedup.NearDupState) = {
+    val rows = dfRows(s.dfreq)
+    assert(rows.size == s.dfRows, s"dfRows ${s.dfRows}, table ${rows.size}")
+    (s.dfreq.schema, rows)
+  }
+
+  private def dfRows(dfreq: DataFrame): Seq[(Long, Long)] =
+    dfreq.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+
   private def pairSet(q: DataFrame): Set[(Long, Long)] =
     q.select("ai", "bi").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -227,7 +239,7 @@ class DedupSpec extends SparkSpec {
     assert(acc.value == readsDuringBuild,
       s"merge re-read ${acc.value - readsDuringBuild} corpus text rows")
     assert(merged.nonEmpty)
-    (merged, prefixIndex(state))
+    (merged, prefixIndex(state), dfIndex(state))
   }
 
   test("mergeNearDups finds pairs whose shingles are absent from the corpus df table") {
@@ -242,9 +254,10 @@ class DedupSpec extends SparkSpec {
       (10L, "red green blue cyan magenta yellow black white"),
       (15L, "red green blue cyan magenta yellow black grey"),
       (20L, "one two three four five six seven eight")).toDF("doc_id", "text")
-    val (got, _) = onBothRoutes {
+    val (got, _, _) = onBothRoutes {
       val state = Dedup.nearDupState(corpus, threshold = 0.5)
-      (pairSet(Dedup.mergeNearDups(state, batch)), prefixIndex(state))
+      (pairSet(Dedup.mergeNearDups(state, batch)), prefixIndex(state),
+        dfIndex(state))
     }
     // docs 10/15 share 5 of their 6+6 trigram shingles: j = 5/7 ≈ 0.714
     assert(got == Set((10L, 15L)), got.toString)
@@ -297,7 +310,7 @@ class DedupSpec extends SparkSpec {
     val got = (pairSet(p1), pairSet(p2))
     assert(acc.value == n0 + n1 + n2,
       s"day 2 re-read earlier text: ${acc.value - n0 - n1 - n2} extra rows")
-    (got, prefixIndex(s2))
+    (got, prefixIndex(s2), dfIndex(s2))
   }
 
   test("mergeAndAbsorb: pinned-df ordering still finds dups between two later waves") {
@@ -316,12 +329,12 @@ class DedupSpec extends SparkSpec {
       (20L, "red green blue cyan magenta yellow black grey"),
       (21L, "one two three four five six seven eight")
     ).toDF("doc_id", "text")
-    val (got, _) = onBothRoutes {
+    val (got, _, _) = onBothRoutes {
       val state = Dedup.nearDupState(day0, threshold = 0.5)
       val (p1, s1) = Dedup.mergeAndAbsorb(state, day1)
       assert(p1.count() == 0)
       val (p2, s2) = Dedup.mergeAndAbsorb(s1, day2)
-      (pairSet(p2), prefixIndex(s2))
+      (pairSet(p2), prefixIndex(s2), dfIndex(s2))
     }
     assert(got == Set((10L, 20L)), got.toString)
   }
@@ -357,13 +370,13 @@ class DedupSpec extends SparkSpec {
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (3L, "alpha beta gamma delta epsilon zeta eta kappa"))
       .toDF("doc_id", "text")
-    val (got, _) = onBothRoutes {
+    val (got, _, _) = onBothRoutes {
       val state = Dedup.nearDupState(corpus, threshold = 0.5)
       val (pairs, next) = Dedup.mergeAndAbsorb(state, retry)
       assert(pairs.count() == 2)
       assert(next.docs.count() == 3) // 1 absorbed once, not twice
       assert(next.docs.select("doc_id").distinct().count() == 3)
-      (pairSet(pairs), prefixIndex(next))
+      (pairSet(pairs), prefixIndex(next), dfIndex(next))
     }
     // doc 1 is already stored: no (1,1) self-pair, no duplicate rows —
     // only the new doc's pairs surface
@@ -379,7 +392,7 @@ class DedupSpec extends SparkSpec {
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val day2 = Seq((3L, "alpha beta gamma delta epsilon zeta eta kappa"))
       .toDF("doc_id", "text")
-    val (got, _) = onBothRoutes {
+    val (got, _, _) = onBothRoutes {
       val state = Dedup.nearDupState(corpus, threshold = 0.5)
       val (pairs, next) = Dedup.mergeAndAbsorb(state, empty)
       assert(pairs.count() == 0)
@@ -388,7 +401,7 @@ class DedupSpec extends SparkSpec {
       assert(prefixIndex(next) == prefixIndex(state))
       // and tomorrow still works against it
       val (p2, s2) = Dedup.mergeAndAbsorb(next, day2)
-      (pairSet(p2), prefixIndex(s2))
+      (pairSet(p2), prefixIndex(s2), dfIndex(s2))
     }
     assert(got == Set((1L, 3L), (2L, 3L)), got.toString)
   }
@@ -441,7 +454,8 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(after == before)
     assert(before.nonEmpty)
-    (after, prefixIndex(state), prefixIndex(recut))
+    (after, prefixIndex(state), prefixIndex(recut), dfIndex(state),
+      dfIndex(recut))
   }
 
   test("prefixFrame: novel shingles rank df = 0, df ties break on h") {
@@ -455,7 +469,7 @@ class DedupSpec extends SparkSpec {
       (3L, Seq(-7L, 2L, 3L)))        // signed order: −7 first
       .toDF("doc_id", "hss").withColumn("sz", size(col("hss")))
     val got = onBothRoutes {
-      val p = Dedup.prefixFrame(docs, dfreq, 0.5 - 1e-4)
+      val p = Dedup.prefixFrame(docs, dfreq, 6L, 0.5 - 1e-4)
       (p.schema, p.collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq)
     }
@@ -469,14 +483,111 @@ class DedupSpec extends SparkSpec {
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, null), (3L, ""), (4L, "red green blue cyan"))
       .toDF("doc_id", "text")
-    val (_, rows) = onBothRoutes(prefixIndex(
-      Dedup.nearDupState(corpus, threshold = 0.1)))
+    val ((_, rows), _) = onBothRoutes {
+      val state = Dedup.nearDupState(corpus, threshold = 0.1)
+      (prefixIndex(state), dfIndex(state))
+    }
     val byDoc = rows.groupBy(_._1)
     assert(!byDoc.contains(2L), "a null text has no shingles to index")
     // at threshold 0.1 a doc of ≤ 10 shingles keeps all of them
     assert(byDoc(1L).map(_._3).size == 6 && byDoc(4L).map(_._3).size == 2,
       rows.toString)
     byDoc.values.foreach(ts => assert(ts.size == ts.head._2, rows.toString))
+  }
+
+  /** [[Dedup.docFrequencies]] of `docs`, as (schema, sorted rows), and
+    * whether it took the driver route (a local relation).
+    */
+  private def dfTable(docs: DataFrame) = {
+    val (dfreq, n) = Dedup.docFrequencies(docs)
+    val rows = dfRows(dfreq)
+    assert(rows.size == n, s"count $n, table ${rows.size}")
+    ((dfreq.schema, rows), onDriver(dfreq))
+  }
+
+  private def onDriver(dfreq: DataFrame): Boolean =
+    dfreq.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** `docs`' df table on the driver route and on the aggregate route:
+    * equal rows under an identical schema, returned.
+    */
+  private def dfBothRoutes(docs: DataFrame) = {
+    val (viaDriver, driven) = dfTable(docs)
+    val (viaAggregate, aggregated) = withoutBroadcast(dfTable(docs))
+    assert(driven && !aggregated, s"routes: driver $driven, aggregate $aggregated")
+    assert(viaDriver == viaAggregate,
+      s"the two df routes differ:\n$viaDriver\n$viaAggregate")
+    viaDriver
+  }
+
+  test("docFrequencies: a hash repeated in one array counts as explode counts it") {
+    import spark.implicits._
+    val docs = Seq((1L, Seq(5L, 5L, 7L)), (2L, Seq(5L, -3L)), (3L, Seq.empty[Long]))
+      .toDF("doc_id", "hss").withColumn("sz", size(col("hss")))
+    val (_, rows) = dfBothRoutes(docs)
+    assert(rows == Seq((-3L, 1L), (5L, 3L), (7L, 1L)), rows.toString)
+  }
+
+  test("docFrequencies: null and empty text, and an empty corpus") {
+    import spark.implicits._
+    val corpus = Seq[(Long, String)](
+      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, null), (3L, ""), (4L, "alpha beta gamma delta"))
+      .toDF("doc_id", "text")
+    val (schema, rows) = dfBothRoutes(Dedup.shingledDocs(corpus))
+    val truth = dfRows(Dedup.shingledDocs(corpus)
+      .select(explode(col("hss")).as("h")).groupBy("h").count())
+    assert(rows == truth && rows.exists(_._2 == 2L), rows.toString)
+    val (emptySchema, none) = dfBothRoutes(
+      Dedup.shingledDocs(Seq.empty[(Long, String)].toDF("doc_id", "text")))
+    assert(none.isEmpty && emptySchema == schema)
+  }
+
+  test("docFrequencies: a task over its share overflows to the aggregate route") {
+    val docs = Dedup.shingledDocs(Tables.load(spark, sf, "documents")
+      .select(col("doc_id"), col("text"))).coalesce(1).localCheckpoint(true)
+    val (full, driven) = dfTable(docs)
+    assert(driven, "the default threshold should count on the driver")
+    val n = full._2.size.toLong
+    // one partition: its share is the whole bound, so the task passes
+    // it part-way through the partition
+    val (over, overDriven) = withBroadcastThreshold(16L * (n / 2))(dfTable(docs))
+    assert(!overDriven, "a task past its share still counted on the driver")
+    assert(over == full, "the overflow route counts differently")
+    // a bound that fits the table exactly stays on the driver
+    val (exact, exactDriven) = withBroadcastThreshold(16L * n)(dfTable(docs))
+    assert(exactDriven && exact == full)
+    assert(withoutBroadcast(dfTable(docs))._1 == full)
+  }
+
+  test("prefixFrame: gates on the df table's row count, not the optimizer's estimate") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val corpus = Tables.load(spark, sf, "documents")
+      .select(col("doc_id"), col("text"))
+    // an aggregate-route df table: a checkpoint whose size estimate is
+    // carried from the documents scan, not from its rows
+    val state = withoutBroadcast(Dedup.nearDupState(corpus))
+    val estimate = state.dfreq.queryExecution.optimizedPlan.stats.sizeInBytes
+    val real = BigInt(state.dfRows) * 16
+    assert(estimate < real, s"estimate $estimate, table $real B")
+    val t = state.threshold - 1e-4
+    def cut() = {
+      val p = Dedup.prefixFrame(state.docs, state.dfreq, state.dfRows, t)
+      val rows = p.collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+      val exchanges = allPlanNodes(p.queryExecution.executedPlan)
+        .count(_.isInstanceOf[ShuffleExchangeExec])
+      ((p.schema, rows), exchanges)
+    }
+    // between the two: an estimate gate would collect and broadcast
+    // the table; the count gate keeps the join/regroup route
+    val (between, exchanges) =
+      withBroadcastThreshold(((estimate + real) / 2).toLong)(cut())
+    assert(exchanges > 0, "a df table over the threshold was broadcast")
+    val (broadcast, none) = cut()
+    assert(none == 0, "the default threshold should broadcast the df index")
+    assert(between == broadcast && between == prefixIndex(state))
   }
 
   test("jaccardTopK ≡ per-probe brute-force ranking; bounded-aggregate plan") {

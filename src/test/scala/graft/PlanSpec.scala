@@ -712,7 +712,8 @@ class PlanSpec extends SparkSpec {
 
   test("q170: broadcast probe prefix keeps the job budget") {
     val sites = curationJobs("q170_jaccard_search")
-    assert(sites.size <= 12,
+    // 12 when the df table is counted by an aggregate and collected
+    assert(sites.size <= 10,
       s"q170 ran ${sites.size} jobs:\n${sites.mkString("\n")}")
     // the probe side broadcasts: the index streams through the
     // candidate join unshuffled
@@ -747,7 +748,7 @@ class PlanSpec extends SparkSpec {
         .select(col("doc_id"), col("text")))
     def exchanges(): Int = {
       val p = graft.operators.Dedup.prefixFrame(state.docs, state.dfreq,
-        state.threshold - 1e-4)
+        state.dfRows, state.threshold - 1e-4)
       p.collect()
       allPlanNodes(p.queryExecution.executedPlan)
         .count(_.isInstanceOf[ShuffleExchangeExec])
@@ -757,11 +758,38 @@ class PlanSpec extends SparkSpec {
       "the shuffle route ran without an exchange")
   }
 
+  test("docFrequencies: the driver-route state build runs no exchange") {
+    import org.apache.spark.sql.functions.col
+    val corpus = graft.sources.Tables.load(spark, sf, "documents")
+      .select(col("doc_id"), col("text"))
+    def build() = recordJobs(graft.operators.Dedup.nearDupState(corpus))
+    build() // warm
+    val (state, driver) = build()
+    val (_, aggregate) = withoutBroadcast(build())
+    assert(driver.shuffleBytes == 0L,
+      s"the driver route shuffled:\n${driver.sites.mkString("\n")}")
+    assert(driver.shuffleBytes + driver.resultBytes <
+      aggregate.shuffleBytes + aggregate.resultBytes,
+      s"driver route $driver, aggregate route $aggregate")
+    // the df table is a local relation: the prefix cut's collect of it
+    // runs no job
+    assert(recordJobs(state.dfreq.collect())._2.sites.isEmpty)
+  }
+
   test("q168: job budget for three prefix cuts") {
     val sites = curationJobs("q168_multiday_neardup")
-    // 34 when each cut explodes, joins and regroups its tokens
-    assert(sites.size <= 25,
+    // 34 when each cut explodes, joins and regroups its tokens; 25
+    // when the df table is counted by an aggregate and each cut
+    // collects it in a job of its own
+    assert(sites.size <= 21,
       s"q168 ran ${sites.size} jobs:\n${sites.mkString("\n")}")
+  }
+
+  test("q60: job budget for one df count and one prefix cut") {
+    val sites = curationJobs("q60_prefix_jaccard_pairs")
+    // 11 when the df table is counted by an aggregate and collected
+    assert(sites.size <= 9,
+      s"q60 ran ${sites.size} jobs:\n${sites.mkString("\n")}")
   }
 
   test("q147: packed and two-column pair plans share one output schema") {

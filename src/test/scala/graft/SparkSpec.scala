@@ -21,23 +21,32 @@ object TestSpark {
 }
 
 /** The jobs a spec body started: each one's call site (the result
-  * stage's name, e.g. "fold at ConnectedComponents.scala:N") and the
-  * shuffle bytes their tasks wrote.
+  * stage's name, e.g. "fold at ConnectedComponents.scala:N"), the
+  * shuffle bytes their tasks wrote and the result bytes their tasks
+  * sent to the driver (the sum of `taskMetrics.resultSize`).
   */
-case class JobRecord(sites: Seq[String], shuffleBytes: Long)
+case class JobRecord(sites: Seq[String], shuffleBytes: Long,
+    resultBytes: Long)
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
 
   /** Run `f` with `spark.sql.autoBroadcastJoinThreshold` = −1, restored
-    * after: broadcast joins off, PrefixSum on its shard route, and
+    * after: broadcast joins off, PrefixSum on its shard route,
+    * `Dedup.docFrequencies` on its aggregate route and
     * `Dedup.prefixFrame` on its explode/join/regroup route.
     */
-  protected def withoutBroadcast[T](f: => T): T = {
+  protected def withoutBroadcast[T](f: => T): T =
+    withBroadcastThreshold(-1L)(f)
+
+  /** Run `f` with `spark.sql.autoBroadcastJoinThreshold` = `bytes`,
+    * restored after.
+    */
+  protected def withBroadcastThreshold[T](bytes: Long)(f: => T): T = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
+    spark.conf.set(key, bytes.toString)
     try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
@@ -50,13 +59,16 @@ abstract class SparkSpec extends AnyFunSuite {
     import org.apache.spark.scheduler._
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
+    val results = new java.util.concurrent.atomic.AtomicLong(0L)
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         sites.add(js.stageInfos.maxBy(_.stageId).name); ()
       }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach(m =>
-          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+        Option(te.taskMetrics).foreach { m =>
+          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          results.addAndGet(m.resultSize)
+        }
     }
     val sc = spark.sparkContext
     org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
@@ -65,7 +77,7 @@ abstract class SparkSpec extends AnyFunSuite {
       val out = body
       org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
       import scala.jdk.CollectionConverters._
-      (out, JobRecord(sites.asScala.toSeq, shuffled.get()))
+      (out, JobRecord(sites.asScala.toSeq, shuffled.get(), results.get()))
     } finally sc.removeSparkListener(listener)
   }
 
