@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The library's front door: a SparkSession builder pre-configured for
-  * the engine — extensions registered (hll_distinct + the
-  * COUNT(DISTINCT) rewrite rule), oracle-grade session defaults (UTC,
+  * the engine — extensions registered (hll_distinct over Spark's
+  * DataSketches HLL, graft's other SQL functions, the COUNT(DISTINCT)
+  * rewrite and the summary router), oracle-grade session defaults (UTC,
   * nanos-as-long parquet reads), and shuffle parallelism sized to the
   * local machine instead of the 200-partition default.
   */

@@ -30,7 +30,8 @@ import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType}
   * [[ExactMoments]] aggregates raw rows; [[ExactMomentsMerge]]
   * re-aggregates stored (Σx, Σx², non-null n) legs — what a routed
   * query runs over a summary's measures (SummaryRewrite), exactly
-  * the sketch/union split of [[HllSketchAgg]]/[[HllUnion]].
+  * the split of Spark's `hll_sketch_agg`/`hll_union_agg` under a
+  * routed `hll_distinct`.
   */
 object ExactMoments {
 

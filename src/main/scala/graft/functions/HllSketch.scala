@@ -1,42 +1,23 @@
 package graft.functions
 
-/** Dense HyperLogLog sketch over 64-bit hashes — the engine's
-  * cardinality estimator core (the reference hand-maintains this table
-  * offline as `vocab_size`, trainer.py:91-118; here it is computed in
-  * one distributed pass).
+/** The PORTABLE dense HyperLogLog core behind `hll_ndv_portable`
+  * ([[HllPortableNdv]]): register arithmetic any SQL engine replays
+  * (the q174 KMV / q128 Count-Min discipline). The caller feeds values
+  * already hashed into [0, PortableDomain) by pure integer arithmetic,
+  * so the REGISTER ARRAY and the ESTIMATE are reproducible outside the
+  * JVM (the DuckDB oracle rebuilds both — q21). The ~2^30 hash domain
+  * keeps estimates accurate to roughly 10^6 NDV; `hll_distinct`
+  * (Spark's DataSketches HLL, [[HllFunctions]]) serves beyond that.
   *
   * Register array layout: 2^p byte registers, each holding the max
-  * leading-zero rank seen for its bucket. Merge is an elementwise max,
-  * so partial aggregation / shuffle-combine is exact — the sketch
-  * behaves identically on 1 or 1000 executors.
-  *
-  * Standard HLL estimator (Flajolet et al. 2007) with the linear-
-  * counting small-range correction; 64-bit hashing makes the
-  * large-range correction unnecessary.
+  * rank seen for its bucket. Merge is an elementwise max, so partial
+  * aggregation / shuffle-combine is exact — the sketch behaves
+  * identically on 1 or 1000 executors.
   */
 object HllSketch {
 
-  /** Default precision: 2^14 registers = 16 KiB per group — ~0.8%
-    * relative error.
-    */
-  val DefaultPrecision = 14
-
-  def numRegisters(precision: Int): Int = 1 << precision
-
   def emptyRegisters(precision: Int): Array[Byte] =
-    new Array[Byte](numRegisters(precision))
-
-  /** Add one 64-bit hash: top p bits pick the register, leading zeros
-    * of the rest (+1) are the rank.
-    */
-  def add(registers: Array[Byte], hash: Long): Unit = {
-    val p = Integer.numberOfTrailingZeros(registers.length)
-    val idx = (hash >>> (64 - p)).toInt
-    val w = hash << p
-    val rank =
-      if (w == 0) (64 - p + 1) else java.lang.Long.numberOfLeadingZeros(w) + 1
-    if (rank > registers(idx)) registers(idx) = rank.toByte
-  }
+    new Array[Byte](1 << precision)
 
   /** Elementwise max — commutative, associative, idempotent. */
   def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
@@ -48,41 +29,6 @@ object HllSketch {
     }
     a
   }
-
-  def estimate(registers: Array[Byte]): Long = {
-    val m = registers.length
-    var invSum = 0.0
-    var zeros = 0
-    var i = 0
-    while (i < m) {
-      invSum += java.lang.Math.pow(2.0, -registers(i).toDouble)
-      if (registers(i) == 0) zeros += 1
-      i += 1
-    }
-    val alpha = m match {
-      case 16 => 0.673
-      case 32 => 0.697
-      case 64 => 0.709
-      case _ => 0.7213 / (1.0 + 1.079 / m)
-    }
-    val raw = alpha * m * m / invSum
-    val est =
-      if (raw <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros)
-      else raw
-    math.round(est)
-  }
-
-  // ------------------------------------------------------------------
-  // PORTABLE variant — HLL over the engine's cross-engine-replayable
-  // integer hash family (the q174 KMV / q128 Count-Min discipline):
-  // the caller feeds values already hashed into [0, PortableDomain)
-  // by pure integer arithmetic any SQL engine replays, so the
-  // REGISTER ARRAY and the ESTIMATE are reproducible outside the JVM
-  // (the DuckDB oracle rebuilds both — q21). Trade-off vs the xxHash64
-  // sketch above: a ~2^30 hash domain keeps estimates standard-HLL
-  // accurate to roughly 10^6 NDV (collision + rank-depth limits past
-  // that); the 64-bit sketch stays the default for ANALYZE-scale NDV.
-  // ------------------------------------------------------------------
 
   /** The shared portable hash modulus (1e9+7, < 2^30). */
   val PortableDomain: Long = 1000000007L

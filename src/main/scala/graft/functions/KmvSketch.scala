@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   * member): keep the k smallest DISTINCT hash values seen; if fewer
   * than k exist the count is exact, otherwise estimate
   * NDV ≈ (k−1)·domain / h_(k) from the k-th smallest hash. The
-  * cardinality-statistics sibling of [[HllDistinct]] (reference
+  * cardinality-statistics sibling of `hll_distinct` (reference
   * anchor: the hand-maintained vocab_size table, trainer.py:91-118)
   * with one property HLL lacks: given a deterministic engine-portable
   * hash, the ENTIRE sketch state — the k values themselves — is

@@ -377,10 +377,7 @@ object Dedup {
     val t = threshold - 1e-4
     // per-row once: distinct shingle hashes, value-sorted for the
     // merge-walk verifier, plus the set size
-    val docs = Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id"),
-        array_sort(shingleHashes(col("text"))).as("hss"))
-      .withColumn("sz", size(col("hss")))
+    val docs = shingledDocs(Tables.load(spark, sfDir, "documents"))
       .persist() // read by the df count, prefix build, both verify sides
 
     // global document frequency per shingle — the rare-first key
@@ -635,11 +632,7 @@ object Dedup {
   def nearDupState(corpusText: DataFrame,
       threshold: Double = 0.8): NearDupState = {
     val t = threshold - 1e-4
-    val docs = corpusText
-      .select(col("doc_id"),
-        array_sort(shingleHashes(col("text"))).as("hss"))
-      .withColumn("sz", size(col("hss")))
-      .localCheckpoint(true)
+    val docs = shingledDocs(corpusText).localCheckpoint(true)
     val (dfreq, dfRows) = docFrequencies(docs)
     val (prefix, prefixRows) =
       checkpointCounted(prefixFrame(docs, dfreq, dfRows, t))

@@ -6,57 +6,39 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import graft.functions.{HllDistinct, HllSketch, TextAnalysis}
+import graft.functions.{HllFunctions, TextAnalysis}
 
 /** The engine's Catalyst plugin (the `BASELINE.json` north star:
   * "Spark SQL with custom cardinality estimator plugin").
   *
-  * Installs two things on a SparkSession (builder:
+  * Installs on a SparkSession (builder:
   * `.withExtensions(new GraftExtensions)`):
   *
-  *  1. SQL surface: `hll_distinct(col[, precision])` — the custom HLL
-  *     aggregate (graft.functions.HllDistinct).
+  *  1. SQL surface: `hll_distinct(col[, precision])` — the canonical
+  *     estimate over Spark's DataSketches HLL
+  *     ([[graft.functions.HllFunctions]]); Spark's own `hll_*`
+  *     functions keep their names — plus graft's other functions.
   *  2. Optimizer rule [[ApproxDistinctRewrite]]: when
   *     `spark.graft.approxDistinct.enabled=true`, rewrites exact
-  *     `COUNT(DISTINCT x)` into the sketch. COUNT DISTINCT over a
-  *     high-cardinality column is one of the few queries whose cost
+  *     `COUNT(DISTINCT x)` into `hll_distinct(x)`. COUNT DISTINCT over
+  *     a high-cardinality column is one of the few queries whose cost
   *     explodes at 100 TB (it must shuffle every distinct value); the
-  *     sketch answers it with one pass and a 16 KiB buffer per group,
-  *     at ~0.8% error — exactly the trade the reference bakes into its
-  *     offline `vocab_size` table (trainer.py:91-118).
+  *     sketch answers it with one pass and a register-sized buffer per
+  *     group, at ~0.8% error — exactly the trade the reference bakes
+  *     into its offline `vocab_size` table (trainer.py:91-118).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((
       new FunctionIdentifier("hll_distinct"),
-      new ExpressionInfo(classOf[HllDistinct].getName, "hll_distinct"),
+      new ExpressionInfo(HllFunctions.getClass.getName, "hll_distinct"),
       (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => HllDistinct(c)
-        case Seq(c, Literal(p: Int, _)) => HllDistinct(c, p)
+        case Seq(c) =>
+          HllFunctions.hll_distinct(c, HllFunctions.DefaultPrecision)
+        case Seq(c, Literal(p: Int, _)) => HllFunctions.hll_distinct(c, p)
         case _ => throw new IllegalArgumentException(
           "hll_distinct(col[, precision])")
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("hll_sketch_agg"),
-      new ExpressionInfo(
-        classOf[graft.functions.HllSketchAgg].getName, "hll_sketch_agg"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => graft.functions.HllSketchAgg(c)
-        case Seq(c, Literal(p: Int, _)) => graft.functions.HllSketchAgg(c, p)
-        case _ => throw new IllegalArgumentException(
-          "hll_sketch_agg(col[, precision])")
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("hll_union"),
-      new ExpressionInfo(
-        classOf[graft.functions.HllUnion].getName, "hll_union"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => graft.functions.HllUnion(c)
-        case Seq(c, Literal(b: Boolean, _)) =>
-          graft.functions.HllUnion(c, asEstimate = b)
-        case _ => throw new IllegalArgumentException(
-          "hll_union(sketch[, asEstimate])")
       }))
     // the exact second-moment family: decimal-only (doubles fail at
     // analysis), order-independent, MV-routable via a declared sumsq
@@ -456,8 +438,7 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
     if (!conf.getConfString(ConfKey, "false").toBoolean) plan
     else plan.transformAllExpressions {
       case ae @ AggregateExpression(Count(Seq(child)), _, true, _, _) =>
-        AggregateExpression(
-          HllDistinct(child, HllSketch.DefaultPrecision),
-          ae.mode, isDistinct = false, ae.filter, ae.resultId)
+        HllFunctions.hll_distinct(child, HllFunctions.DefaultPrecision,
+          ae.filter)
     }
 }

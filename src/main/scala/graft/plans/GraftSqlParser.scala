@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Sort}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import graft.functions.HllFunctions
 
 /** The SQL DDL half of the MV lifecycle (the reference workload is
   * SQL-first — its analytics run as BigQuery SQL, notebook cells 7-8
@@ -140,9 +141,12 @@ case class CreateMaterializedViewCommand(name: String, querySql: String)
     val mins = Seq.newBuilder[(String, String)]
     val maxs = Seq.newBuilder[(String, String)]
     val hlls = Seq.newBuilder[(String, String)]
-    var hllPrecision = graft.functions.HllSketch.DefaultPrecision
+    var hllPrecision = HllFunctions.DefaultPrecision
     aggExprs.foreach {
       case a: Attribute if grain.contains(a.name) => () // grain column
+      case Alias(HllFunctions.Distinct(_, x, p), n) =>
+        hlls += n -> bareSql(x)
+        hllPrecision = p
       case Alias(ae: AggregateExpression, n) =>
         if (ae.isDistinct) unsupported(
           s"measure '$n' is DISTINCT (use hll_distinct for " +
@@ -161,9 +165,6 @@ case class CreateMaterializedViewCommand(name: String, querySql: String)
             s"measure '$n' is count(expr) — count(*) is automatic " +
               "and count(x) routes when x is declared as a sum/avg " +
               "measure")
-          case h: graft.functions.HllDistinct =>
-            hlls += n -> bareSql(h.child)
-            hllPrecision = h.precision
           case other => unsupported(
             s"measure '$n' uses ${other.prettyName}")
         }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions.{col, count, expr, lit, max, min, sum}
+import org.apache.spark.sql.functions.{col, count, expr, hll_union_agg, lit, max, min, sum}
+import graft.functions.HllFunctions
 
 /** Summary-table auto-rewrite — the materialized-view affordance of
   * the reference's host warehouse (BigQuery routes qualifying
@@ -133,7 +134,7 @@ object Summaries {
       gen: Int = 0,
       hlls: Map[String, String] = Map.empty,
       hllSql: Seq[(String, String)] = Nil,
-      hllPrecision: Int = graft.functions.HllSketch.DefaultPrecision,
+      hllPrecision: Int = HllFunctions.DefaultPrecision,
       kmvs: Map[String, String] = Map.empty,
       kmvSql: Seq[(String, String)] = Nil,
       kmvK: Int = 64,
@@ -273,6 +274,9 @@ object Summaries {
   private val loadAttempted =
     new java.util.concurrent.atomic.AtomicBoolean(false)
 
+  /** 2: `hll_distinct` measures store Spark's DataSketches sketches. */
+  private val SpecFormat = 2
+
   private def specToJson(s: Spec): String = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
@@ -282,6 +286,7 @@ object Summaries {
       JObject(m.toList.sorted.map { case (k, v) => k -> JString(v) })
     def strs(ss: Seq[String]) = JArray(ss.map(JString(_)).toList)
     val j = JObject(List(
+      "format" -> JInt(SpecFormat),
       "name" -> JString(s.name),
       "source" -> JString(s.source),
       "summaryPath" -> JString(s.summaryPath),
@@ -349,7 +354,12 @@ object Summaries {
       hllPrecision = num("hllPrecision").toInt,
       kmvs = smap("kmvs"), kmvSql = pairs("kmvSql"),
       kmvK = num("kmvK").toInt, kmvDomain = num("kmvDomain"),
-      routable = j("routable").asInstanceOf[JBool].value,
+      // a spec from before SpecFormat stores graft's own HLL register
+      // arrays, which Spark's sketch functions cannot read: its
+      // hll_distinct measures would answer wrong, so it never routes
+      routable = j("routable").asInstanceOf[JBool].value &&
+        ((j.contains("format") && num("format") == SpecFormat) ||
+          smap("hlls").isEmpty),
       nns = smap("nns"), nnSql = pairs("nnSql"),
       fpPaths = strs("fpPaths"), sourceFp = str("sourceFp"),
       // absent in pre-delta-read spec files: those summaries reload
@@ -1208,18 +1218,16 @@ object Summaries {
 
   val CntCol = "__cnt"
 
-  private def hllSketchCol(measureSql: String, precision: Int) = {
+  /** The stored `hll_distinct` measure, resolved against `df`: the
+    * sketch input depends on the measure's type.
+    */
+  private def hllSketchCol(df: DataFrame, measureSql: String,
+      precision: Int) = {
     import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.functions.HllSketchAgg(
-      GraftColumnBridge.expression(expr(measureSql)), precision)
-      .toAggregateExpression())
-  }
-
-  private def hllUnionCol(c: org.apache.spark.sql.Column) = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.functions.HllUnion(
-      GraftColumnBridge.expression(c), asEstimate = false)
-      .toAggregateExpression())
+    val x = df.select(expr(measureSql)).queryExecution.analyzed
+      .expressions.head match { case Alias(c, _) => c; case c => c }
+    GraftColumnBridge.column(
+      HllFunctions.sketchAgg(x, precision).toAggregateExpression())
   }
 
   private def kmvSketchCol(measureSql: String, k: Int, domain: Long) = {
@@ -1282,7 +1290,7 @@ object Summaries {
       mins: Seq[(String, String)] = Nil,
       maxs: Seq[(String, String)] = Nil,
       hlls: Seq[(String, String)] = Nil,
-      hllPrecision: Int = graft.functions.HllSketch.DefaultPrecision,
+      hllPrecision: Int = HllFunctions.DefaultPrecision,
       kmvs: Seq[(String, String)] = Nil,
       kmvK: Int = 64,
       kmvDomain: Long = 1000000007L,
@@ -1329,7 +1337,8 @@ object Summaries {
       // sketch measures: the stored form is the mergeable STATE
       // (HLL registers / KMV bottom-k arrays), so distinct counts
       // re-aggregate across rollups and generations
-      hlls.map { case (n, s) => hllSketchCol(s, hllPrecision).as(n) } ++
+      hlls.map { case (n, s) =>
+        hllSketchCol(raw, s, hllPrecision).as(n) } ++
       kmvs.map { case (n, s) => kmvSketchCol(s, kmvK, kmvDomain).as(n) } ++
       qsks.map { case (n, (ps, vs)) => qskSketchCol(ps, vs, qskK).as(n) })
     val entries = listEntries(Seq(source),
@@ -1583,7 +1592,7 @@ object Summaries {
       mins: Seq[(String, String)] = Nil,
       maxs: Seq[(String, String)] = Nil,
       hlls: Seq[(String, String)] = Nil,
-      hllPrecision: Int = graft.functions.HllSketch.DefaultPrecision,
+      hllPrecision: Int = HllFunctions.DefaultPrecision,
       kmvs: Seq[(String, String)] = Nil,
       kmvK: Int = 64,
       kmvDomain: Long = 1000000007L,
@@ -1647,7 +1656,8 @@ object Summaries {
       maxs.map { case (n, s) => max(expr(s)).as(n) } ++
       // sketch measures work over any substrate: the stored form is
       // the mergeable STATE, exactly as in create()
-      hlls.map { case (n, s) => hllSketchCol(s, hllPrecision).as(n) } ++
+      hlls.map { case (n, s) =>
+        hllSketchCol(raw, s, hllPrecision).as(n) } ++
       kmvs.map { case (n, s) => kmvSketchCol(s, kmvK, kmvDomain).as(n) } ++
       qsks.map { case (n, (ps, vs)) => qskSketchCol(ps, vs, qskK).as(n) })
     val filterSql = where.map(_.trim).getOrElse("")
@@ -1942,7 +1952,7 @@ object Summaries {
       spec.minSql.map { case (n, s) => min(expr(s)).as(n) } ++
       spec.maxSql.map { case (n, s) => max(expr(s)).as(n) } ++
       spec.hllSql.map { case (n, s) =>
-        hllSketchCol(s, spec.hllPrecision).as(n) } ++
+        hllSketchCol(src, s, spec.hllPrecision).as(n) } ++
       spec.kmvSql.map { case (n, s) =>
         kmvSketchCol(s, spec.kmvK, spec.kmvDomain).as(n) } ++
       spec.qskSql.map { case (n, ps, vs) =>
@@ -1969,7 +1979,7 @@ object Summaries {
           sum(col(n)).cast(types(n)).as(n) } ++
         spec.minSql.map { case (n, _) => min(col(n)).as(n) } ++
         spec.maxSql.map { case (n, _) => max(col(n)).as(n) } ++
-        spec.hllSql.map { case (n, _) => hllUnionCol(col(n)).as(n) } ++
+        spec.hllSql.map { case (n, _) => hll_union_agg(col(n)).as(n) } ++
         spec.kmvSql.map { case (n, _) =>
           kmvUnionCol(col(n), spec.kmvK, spec.kmvDomain).as(n) } ++
         spec.qskSql.map { case (n, _, _) =>
@@ -3339,15 +3349,16 @@ object SummaryRewrite extends Rule[LogicalPlan] {
               case _ => false
             }) =>
           Some(wrap(p.copy(frequencyExpression = colFor(spec.cntCol))))
-        // approximate distinct: a stored-sketch measure answers
+        // approximate distinct: the sketch aggregate of a canonical
         // hll_distinct (and, with the approxDistinct rewrite on,
-        // COUNT(DISTINCT x) through it) by register-max over the
-        // per-grain sketches — BIT-identical to sketching the raw
-        // rows, provided the precision matches the stored registers
-        case hd: graft.functions.HllDistinct
-            if hd.precision == spec.hllPrecision =>
-          Summaries.measureKey(hd.child).flatMap(spec.hlls.get)
-            .map(c => wrap(graft.functions.HllUnion(colFor(c))))
+        // COUNT(DISTINCT x) through it) becomes hll_union_agg over
+        // the stored per-grain sketches; under the canonical
+        // finalizer the estimate is the raw one EXACTLY, provided
+        // the precision matches the stored sketches. rewriteExpr
+        // keeps a bare hll_sketch_agg off this route.
+        case HllFunctions.Sketch(x, p) if p == spec.hllPrecision =>
+          Summaries.measureKey(x).flatMap(spec.hlls.get)
+            .map(c => wrap(new HllUnionAgg(colFor(c))))
         // AVG via its exact legs: SUM(sum_m) / SUM(__nn_m), spliced
         // into the query's OWN Average.evaluateExpression (its sum /
         // count buffer attrs swapped for the re-aggregated summary
@@ -3454,6 +3465,13 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     }
 
     def rewriteExpr(e: Expression): Option[Expression] = {
+      // a bare hll_sketch_agg answers with the sketch itself, whose
+      // bytes a union of stored sketches does not reproduce: only a
+      // canonical hll_distinct's sketch routes
+      val canonical = e.collect { case HllFunctions.Distinct(ae, _, _) => ae }
+      if (e.collect {
+          case ae @ AggregateExpression(_: HllSketchAgg, _, _, _, _) => ae
+        }.exists(!canonical.contains(_))) return None
       var ok = true
       val out = e.transformUp {
         case ar: AttributeReference if grainSub.contains(ar.exprId) =>

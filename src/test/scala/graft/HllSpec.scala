@@ -9,52 +9,107 @@ import graft.sources.Tables
 
 class HllSpec extends SparkSpec {
 
-  test("sketch core: exact on tiny cardinalities (linear counting)") {
-    val regs = HllSketch.emptyRegisters(14)
+  private def estimate(df: org.apache.spark.sql.DataFrame,
+      c: String): Long =
+    df.agg(HllFunctions.hll_distinct(col(c))).collect()(0).getLong(0)
+
+  test("hll_distinct: exact on tiny cardinalities") {
+    import spark.implicits._
     val rnd = new scala.util.Random(7)
     val values = (1 to 10).map(_ => rnd.nextLong())
-    values.foreach(v => HllSketch.add(regs, v))
-    values.foreach(v => HllSketch.add(regs, v)) // idempotent
-    assert(HllSketch.estimate(regs) == 10L)
+    // every value twice: duplicates never count
+    assert(estimate((values ++ values).toDF("v"), "v") == 10L)
   }
 
-  test("sketch core: ~1% error across cardinalities") {
+  test("hll_distinct: within max(2, 3%) of the exact count across " +
+      "cardinalities") {
     for (n <- Seq(100, 1000, 10000, 100000)) {
-      val regs = HllSketch.emptyRegisters(14)
-      val rnd = new scala.util.Random(42)
-      (1 to n).foreach(_ => HllSketch.add(regs, rnd.nextLong()))
-      val est = HllSketch.estimate(regs)
-      assert(math.abs(est - n) <= math.max(2, 0.03 * n),
-        s"n=$n est=$est")
+      val df = spark.range(n).select(xxhash64(col("id")).as("v"))
+      val est = estimate(df, "v")
+      assert(math.abs(est - n) <= math.max(2, 0.03 * n), s"n=$n est=$est")
     }
   }
 
-  test("sketch core: merge of halves equals union sketch") {
-    val rnd = new scala.util.Random(1)
-    val all = (1 to 5000).map(_ => rnd.nextLong())
-    val (h1, h2) = all.splitAt(2500)
-    val a = HllSketch.emptyRegisters(12)
-    val b = HllSketch.emptyRegisters(12)
-    val u = HllSketch.emptyRegisters(12)
-    h1.foreach(v => HllSketch.add(a, v))
-    h2.foreach(v => HllSketch.add(b, v))
-    all.foreach(v => HllSketch.add(u, v))
-    assert(HllSketch.merge(a, b).toSeq == u.toSeq)
+  test("hll_distinct merge shape: one partition, eight partitions and " +
+      "hll_union_agg over per-grain sketches give one estimate") {
+    for (n <- Seq(40, 12000, 200000)) {
+      val df = spark.range(n)
+        .select(col("id").cast("string").as("v"), (col("id") % 37).as("g"))
+      val one = estimate(df.coalesce(1), "v")
+      val eight = estimate(df.repartition(8), "v")
+      val grains = df.groupBy("g")
+        .agg(hll_sketch_agg(col("v"), HllFunctions.DefaultPrecision).as("s"))
+        .agg(hll_union_agg(col("s")).as("u"))
+        .select(hll_sketch_estimate(hll_union(col("u"), col("u"))))
+        .collect()(0).getLong(0)
+      assert(one == eight && eight == grains, s"n=$n: $one $eight $grains")
+      assert(math.abs(one - n) <= math.max(2, 0.03 * n), s"n=$n est=$one")
+    }
   }
 
-  test("sketch core: property — estimate within 5% of true ndv") {
+  test("hll_distinct: property — estimate within 5% of true ndv") {
+    import spark.implicits._
     val prop = Prop.forAll(
       Gen.choose(50, 20000), Gen.choose(0L, Long.MaxValue)) {
       (n: Int, seed: Long) =>
-        val regs = HllSketch.emptyRegisters(14)
         val rnd = new scala.util.Random(seed)
         val distinct = (1 to n).map(_ => rnd.nextLong()).distinct
-        distinct.foreach(v => HllSketch.add(regs, v))
-        val est = HllSketch.estimate(regs)
+        val est = estimate(distinct.toDF("v"), "v")
         math.abs(est - distinct.size) <= math.max(3, 0.05 * distinct.size)
     }
     val res = check(Parameters.default.withMinSuccessfulTests(30), prop)
     assert(res.status == Passed, res.status.toString)
+  }
+
+  test("hll_distinct over double, decimal, date, boolean and all-null " +
+      "columns: within error of the exact count, nulls not counted") {
+    val df = spark.range(5000).select(
+      when(col("id") % 10 === 0, lit(null))
+        .otherwise(col("id") / 7.0).as("d"),
+      (col("id") % 1500).cast("decimal(12,2)").as("dec"),
+      date_add(lit("2020-01-01").cast("date"), (col("id") % 900).cast("int"))
+        .as("dt"),
+      when(col("id") % 3 === 0, lit(null))
+        .otherwise(col("id") % 2 === 0).as("b"),
+      lit(null).cast("double").as("nul"))
+    for (c <- df.columns) {
+      val exact = df.agg(countDistinct(col(c))).collect()(0).getLong(0)
+      val est = estimate(df, c)
+      assert(math.abs(est - exact) <= math.max(2, 0.03 * exact),
+        s"$c: $est vs $exact")
+    }
+    assert(estimate(df, "b") == 2L && estimate(df, "nul") == 0L)
+    // GraftAnalyze installs an NDV for each of them
+    val tmp = java.nio.file.Files.createTempDirectory("wh").toString
+    df.write.mode("overwrite").option("path", s"$tmp/hll_types_t")
+      .saveAsTable("hll_types_t")
+    try {
+      val stats = plans.GraftAnalyze.analyze(spark, "hll_types_t",
+        df.columns.toSeq)
+      val ndvs = stats.colStats.map { case (c, s) =>
+        c -> s.distinctCount.map(_.toLong).getOrElse(-1L) }
+      assert(ndvs("b") == 2L && ndvs("nul") == 0L, ndvs)
+      assert(math.abs(ndvs("dt") - 900L) <= 27L, ndvs)
+    } finally spark.sql("DROP TABLE hll_types_t")
+  }
+
+  test("Spark's sketch functions resolve under their own names") {
+    Tables.load(spark, sf, "lineitem").createOrReplaceTempView("li_spark_hll")
+    try {
+      val r = spark.sql(
+        """SELECT hll_sketch_estimate(hll_sketch_agg(l_partkey)) AS e,
+          |  count(DISTINCT l_partkey) AS x FROM li_spark_hll""".stripMargin)
+        .collect()(0)
+      val (e, x) = (r.getLong(0), r.getLong(1))
+      assert(math.abs(e - x) <= math.max(2, 0.05 * x), s"$e vs $x")
+      // scalar hll_union: the union of two sketches covers both
+      val u = spark.sql(
+        """SELECT hll_sketch_estimate(hll_union(a, b)) FROM (
+          |  SELECT hll_sketch_agg(l_partkey) AS a,
+          |    hll_sketch_agg(l_suppkey) AS b FROM li_spark_hll)
+          |""".stripMargin).collect()(0).getLong(0)
+      assert(u >= e, s"$u < $e")
+    } finally spark.catalog.dropTempView("li_spark_hll")
   }
 
   test("hll_distinct aggregate: exact vs approx on lineitem columns") {
@@ -79,7 +134,7 @@ class HllSpec extends SparkSpec {
       .agg(HllFunctions.hll_distinct(col("l_partkey"))).collect()(0).getLong(0)
     val many = li.repartition(16)
       .agg(HllFunctions.hll_distinct(col("l_partkey"))).collect()(0).getLong(0)
-    assert(one == many) // merge = elementwise max → plan-shape independent
+    assert(one == many) // the canonical estimate reads the registers only
   }
 
   test("hll_distinct registered for SQL via GraftExtensions") {
@@ -103,11 +158,11 @@ class HllSpec extends SparkSpec {
     spark.conf.set(ApproxDistinctRewrite.ConfKey, "true")
     try {
       val plan = spark.sql(sql).queryExecution.optimizedPlan.toString
-      assert(plan.contains("hll_distinct"), s"rule did not fire:\n$plan")
+      assert(plan.contains("hll_sketch_agg"), s"rule did not fire:\n$plan")
       val approx = spark.sql(sql).collect()(0).getLong(0)
       spark.conf.set(ApproxDistinctRewrite.ConfKey, "false")
       val exactPlan = spark.sql(sql).queryExecution.optimizedPlan.toString
-      assert(!exactPlan.contains("hll_distinct"))
+      assert(!exactPlan.contains("hll_sketch_agg"))
       val exact = spark.sql(sql).collect()(0).getLong(0)
       assert(math.abs(approx - exact) <= math.max(2, 0.05 * exact))
     } finally spark.conf.set(ApproxDistinctRewrite.ConfKey, "false")

@@ -564,7 +564,58 @@ class SummaryRewriteSpec extends SparkSpec {
       val other = () => raw.groupBy("l_returnflag")
         .agg(hll_distinct(col("l_suppkey"), 10).as("nd"))
       assert(scanPaths(other()).exists(_.contains("lineitem")))
+      // so must a bare sketch: hll_union_agg over the stored sketches
+      // would not reproduce its bytes
+      val bare = () => raw.groupBy("l_returnflag")
+        .agg(hll_sketch_agg(col("l_suppkey"), 14).as("sk"))
+      assert(scanPaths(bare()).exists(_.contains("lineitem")))
     } finally Summaries.drop("spec_hll")
+  }
+
+  test("persistence: an old-format spec with hll measures fails closed") {
+    import graft.functions.HllFunctions.hll_distinct
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val raw = Tables.load(spark, sf, "lineitem")
+    val qty = "cast(l_quantity as decimal(18,2))"
+    val q = () => raw.groupBy("l_returnflag")
+      .agg(sum(expr(qty)).as("q"), hll_distinct(col("l_suppkey")).as("nd"))
+      .orderBy("l_returnflag")
+    val sumOnly = () => raw.groupBy("l_returnflag")
+      .agg(sum(expr(qty)).as("q")).orderBy("l_returnflag")
+    // what a spec file looked like before the format marker: the same
+    // JSON without "format"
+    def writeOldFormat(name: String): Unit = {
+      val f = new java.io.File(
+        s"spark-warehouse/graft_summaries/_specs/$name.json")
+      val JObject(fields) = JsonMethods.parse(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+      java.nio.file.Files.write(f.toPath, JsonMethods.compact(
+        JObject(fields.filterNot(_._1 == "format"))).getBytes("UTF-8"))
+    }
+    Summaries.create(raw, "spec_hll_old",
+      grain = Seq("l_returnflag", "l_linestatus"),
+      sums = Seq("sum_qty" -> qty), hlls = Seq("hll_supp" -> "l_suppkey"))
+    try {
+      Summaries.unload() // a current-format spec reloads and routes
+      assert(scanPaths(q()).forall(_.contains("graft_summaries")))
+      writeOldFormat("spec_hll_old")
+      Summaries.unload() // simulated restart: the spec reloads from disk
+      val expected = withoutRouting { q().collect().toSeq }
+      // every query, sketch or not, answers from the raw table
+      assert(scanPaths(q()).exists(_.contains("lineitem")))
+      assert(scanPaths(sumOnly()).exists(_.contains("lineitem")))
+      assert(q().collect().toSeq == expected)
+    } finally Summaries.drop("spec_hll_old")
+    // an old-format spec WITHOUT hll measures still routes
+    Summaries.create(raw, "spec_sum_old",
+      grain = Seq("l_returnflag", "l_linestatus"),
+      sums = Seq("sum_qty" -> qty))
+    try {
+      writeOldFormat("spec_sum_old")
+      Summaries.unload()
+      assert(scanPaths(sumOnly()).forall(_.contains("graft_summaries")))
+    } finally Summaries.drop("spec_sum_old")
   }
 
   test("COUNT(DISTINCT) composes through both rewrites onto the sketch") {
@@ -590,16 +641,20 @@ class SummaryRewriteSpec extends SparkSpec {
         .agg(hll_distinct(col("l_suppkey")).as("nd"))
         .orderBy("l_returnflag").collect().toSeq
       assert(routed == viaHll)
-      // SQL surface: hll_union over hll_sketch_agg partials equals
-      // the one-shot hll_distinct
+      // SQL surface: Spark's hll_union_agg over hll_sketch_agg
+      // partials, under the canonical finalizer, equals the one-shot
+      // hll_distinct
       raw.createOrReplaceTempView("li_hll")
       try {
         val sql = spark.sql(
-          """SELECT l_returnflag, hll_union(sk) AS nd FROM (
-            |  SELECT l_returnflag, l_shipdate,
-            |    hll_sketch_agg(l_suppkey) AS sk
-            |  FROM li_hll GROUP BY l_returnflag, l_shipdate)
-            |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
+          """SELECT l_returnflag, hll_sketch_estimate(hll_union(u, u)) AS nd
+            |FROM (
+            |  SELECT l_returnflag, hll_union_agg(sk) AS u FROM (
+            |    SELECT l_returnflag, l_shipdate,
+            |      hll_sketch_agg(l_suppkey, 14) AS sk
+            |    FROM li_hll GROUP BY l_returnflag, l_shipdate)
+            |  GROUP BY l_returnflag)
+            |ORDER BY l_returnflag""".stripMargin)
           .collect().toSeq
         assert(sql == viaHll)
       } finally spark.catalog.dropTempView("li_hll")
