@@ -33,14 +33,21 @@ import graft.sources.Tables
   * ONE materializing action. Edge lists stay edge-sized throughout.
   *
   * ONE physical regime: the contraction runs over the raw pair RDD
-  * as SECONDARY-SORT star rounds ([[bigLoop]]) — each star phase is
-  * one `repartitionAndSortWithinPartitions` shuffle whose contiguous
-  * ascending runs carry min(Γ(u)) in their first row, so the phase
-  * needs no join and no per-key state. Hub-safe by construction: the
-  * sort-based shuffle spills and the run walk streams, so a
-  * 10⁸-degree hub is just a long sorted run, never a buffered set
-  * (proven against a union-find replica on a synthetic-hub fixture
-  * in SkewFixtureSpec). A second small-graph regime (groupByKey
+  * as SECONDARY-SORT star rounds ([[bigLoop]]) — each star phase reads
+  * its pairs as contiguous ascending runs that carry min(Γ(u)) in
+  * their first row, so the phase needs no join and no per-key state.
+  * Where the runs come from follows the pair count alone. A graph of
+  * at most 64k oriented pairs — the count that already sizes its
+  * rounds to one partition — sorts that partition inside each task
+  * and plans no exchange, the RDD counterpart of Catalyst planning no
+  * exchange over a single-partition child. A larger graph runs each
+  * phase as one `repartitionAndSortWithinPartitions` shuffle. Hub-safe
+  * by construction either way: the in-task sort holds at most
+  * 2 × 64k pairs (2 MB of longs) whatever the degrees, and the
+  * shuffle's sort spills while the run walk streams, so a 10⁸-degree
+  * hub is just a long sorted run, never a buffered set (both routes
+  * proven against a union-find replica on a synthetic-hub fixture in
+  * SkewFixtureSpec). A second small-graph regime (groupByKey
   * adjacency sets behind an edge bound + degree probe) existed
   * through round 9 and was deleted after the sorted-run loop measured
   * FASTER on the small regime's own fixture (PROFILE.md round-9
@@ -83,12 +90,12 @@ object ConnectedComponents {
     * own component min. Input columns (a, b); self-loops and
     * duplicates are tolerated.
     */
-  private def forest(edges: DataFrame): DataFrame = {
+  private[graft] def forest(edges: DataFrame): DataFrame = {
     // orient (big, small) and drop self-loops — the invariant every
-    // round preserves. No dedup here: round 1's sorted-run walk skips
-    // equal adjacent pairs, so duplicates die in its first shuffle.
+    // round preserves. No dedup here: round 1's sorted runs skip
+    // equal adjacent pairs, so duplicates die in its first phase.
     // The RDD-level checkpoint materializes in the same job that
-    // counts the pairs for partition sizing.
+    // counts the pairs for the round partitioning.
     val first = edges
       .select(greatest(col("a"), col("b")).cast("long").as("a"),
         least(col("a"), col("b")).cast("long").as("b"))
@@ -119,90 +126,111 @@ object ConnectedComponents {
         count(lit(1)).over(Window.partitionBy("component")))
       .orderBy("node")
 
+  /** Oriented pairs per round partition: the contraction spreads past
+    * one partition only when its pair count exceeds this (64k pairs,
+    * 1 MB of longs), and a graph of at most this many pairs runs its
+    * rounds inside one partition with no exchange ([[bigLoop]]).
+    */
+  private val PairsPerPartition: Long = 1L << 16
+
+  /** The pair count up to which [[bigLoop]] runs its rounds inside one
+    * partition; specs set 0 to force the exchanged rounds on any graph.
+    */
+  private[graft] val onePartitionBound =
+    new scala.util.DynamicVariable[Long](PairsPerPartition)
+
   /** The contraction loop: one LARGE-STAR + SMALL-STAR double round per
-    * materialization, over the raw pair RDD with every per-key step
-    * HUB-SAFE:
+    * materialization, over the raw pair RDD. Each star phase reads its
+    * pairs as SORTED RUNS ([[sortedRuns]]): per node u, its partners
+    * as one contiguous ascending run whose first value is min(Γ(u)), so
+    * a phase is one streamed walk ([[runWalk]]) with no join and no
+    * per-key state. Where the runs come from depends only on the pair
+    * count, the way Catalyst plans no exchange over a single-partition
+    * child:
     *
-    *  - node minima via `reduceByKey(min)` — map-side combine reduces
-    *    a 10⁸-degree hub to one partial per task BEFORE the shuffle
-    *    (the partial-aggregation property the DataFrame spelling had);
-    *  - re-attachment via [[streamJoin]] — a co-partitioned STREAMED
-    *    hash join: the singleton side (one min per node, N/parts
-    *    entries) builds a per-partition map, the edge side streams
-    *    through it row by row. A hub's neighborhood never materializes
-    *    in memory (contrast `cogroup`/`groupByKey`, which buffer a
-    *    key's values — the shape that confined the deleted small-graph
-    *    regime to bounded graphs).
+    *  - at most [[onePartitionBound]] pairs (64k): the checkpointed
+    *    pairs are coalesced to one partition once, and every phase
+    *    sorts that partition inside its task. A round is one stage, and
+    *    the final min-reduce to the star forest runs in the same
+    *    partition. No star phase emits more distinct pairs than it
+    *    reads, so a sort holds at most 2 × 64k pairs (2 MB of longs,
+    *    the large-star phase's bidirected input) and a hub of any
+    *    degree costs bounded memory;
+    *  - above it: each phase is one `repartitionAndSortWithinPartitions`
+    *    shuffle whose sort spills and whose walk streams, so a
+    *    10⁸-degree hub is a long sorted run, never a buffered set, and
+    *    the forest comes from one `reduceByKey(min)`.
     *
     * This replaced an equivalent DataFrame/AQE spelling: the round
     * plan is structurally identical every iteration, yet Catalyst
     * re-planned it inside every localCheckpoint at ~400 ms/round of
     * pure scheduling latency on a 60k-edge forced run (q162) —
     * measured twice as large as the actual per-round compute. The RDD
-    * round is the same algebra with zero planning: four E-sized
-    * shuffles (two partitionBy, two combined reduceByKey) and a
-    * checksum fold riding the materializing action. Dup edges are
-    * tolerated throughout — the min-reduces absorb them (each input
-    * row yields exactly one v>u re-attachment, so multiplicity grows
-    * at most ADDITIVELY by #keys per round), and at the edge-set
+    * round is the same algebra with zero planning: two sorted phases
+    * and a checksum fold riding the materializing action. Dup edges
+    * are tolerated throughout — the sorted runs drop equal adjacent
+    * pairs, so every phase works on a pair SET — and at the edge-set
     * fixed point the output self-canonicalizes (the small-star left
     * branch emits ONE row per node and the right branch empties), so
     * the checksum repeats verbatim.
     */
   private def bigLoop(spark: SparkSession, first: RDD[(Long, Long)],
       nEdges: Long): DataFrame = {
-    // data-proportional parallelism, the job AQE did for the DataFrame
-    // spelling. A small graph runs ONE task per stage: each round is
-    // three stages, so per-task scheduling dominates a tiny round. A
-    // graph past ~64k pairs per partition spreads to the default
-    // parallelism, and past ~1M oriented pairs (16 MB) per partition
-    // the partition count grows with the data (~1000-way at 10⁹ edges).
+    val onePartition = nEdges <= onePartitionBound.value
+    // data-proportional parallelism for the exchanged rounds, the job
+    // AQE did for the DataFrame spelling: the default parallelism past
+    // 64k pairs per partition, and past ~1M oriented pairs (16 MB) per
+    // partition the partition count grows with the data (~1000-way at
+    // 10⁹ edges)
     val parts = Seq(
-      math.min((nEdges + (1L << 16) - 1) >> 16,
+      math.min((nEdges + PairsPerPartition - 1) / PairsPerPartition,
         spark.sparkContext.defaultParallelism.toLong),
       nEdges / 1000000L, 1L).max.toInt
 
-    /** SECONDARY SORT: one sorted shuffle delivering each node's rows
-      * as a CONTIGUOUS ASCENDING run — the run's first value IS
-      * min(Γ(u)), so a star phase needs no second pass, no join, and
-      * no per-key state: this replaced a reduceByKey(min) +
+    /** SECONDARY SORT: each node's rows as a CONTIGUOUS ASCENDING run,
+      * equal pairs dropped — the run's first value IS min(Γ(u)), so a
+      * star phase needs no second pass, no join, and no per-key state.
+      * One partition sorts inside its task ([[sortedInTask]]); more go
+      * through one sorted shuffle, which replaced a reduceByKey(min) +
       * co-partitioned stream-join spelling (two shuffles and a
-      * recomputed zip stage per star) with ONE shuffle and one
-      * streamed stage, halving the round from six stages to three
-      * (measured 180 → ~95 ms/round on the forced q162 run). Hub-safe
-      * by the same argument as before: sort-based shuffle spills, and
-      * the run walk streams — a 10⁸-degree hub is just a long run,
-      * never a buffered HashSet.
+      * recomputed zip stage per star), halving the round from six
+      * stages to three (measured 180 → ~95 ms/round on the forced q162
+      * run). Hub-safe either way: the one-partition sort holds at most
+      * 2 × 64k pairs, and the shuffle's sort spills while the run walk
+      * streams — a 10⁸-degree hub is just a long run, never a buffered
+      * HashSet.
       */
-    def sortedRuns(in: RDD[(Long, Long)]): RDD[(Long, Long)] = {
-      val keyed = in.map(p => (p, null.asInstanceOf[Null]))
-      val byFirst = new org.apache.spark.Partitioner {
-        override def numPartitions: Int = parts
-        override def getPartition(key: Any): Int = {
-          val h = key.asInstanceOf[(Long, Long)]._1.hashCode % parts
-          if (h < 0) h + parts else h
-        }
-      }
-      new org.apache.spark.rdd.OrderedRDDFunctions[(Long, Long), Null,
-          ((Long, Long), Null)](keyed)(
-          Ordering.Tuple2[Long, Long], implicitly, implicitly, implicitly)
-        .repartitionAndSortWithinPartitions(byFirst)
-        .mapPartitions({ it =>
-          // the sort makes DEDUP free: identical pairs are adjacent,
-          // so skipping equal-consecutive rows keeps every round's
-          // working set a SET (multiplicity from duplicate emissions
-          // would otherwise grow additively per round — at 10⁹ edges
-          // that is real shuffle volume). Fixed-point semantics are
-          // unchanged: emissions are a function of the pair SET.
-          var hasPrev = false
-          var pa = 0L
-          var pb = 0L
-          it.flatMap { case (p @ (a, b), _) =>
-            if (hasPrev && a == pa && b == pb) Iterator.empty
-            else { hasPrev = true; pa = a; pb = b; Iterator.single(p) }
+    def sortedRuns(in: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      if (onePartition) in.mapPartitions(sortedInTask)
+      else {
+        val keyed = in.map(p => (p, null.asInstanceOf[Null]))
+        val byFirst = new org.apache.spark.Partitioner {
+          override def numPartitions: Int = parts
+          override def getPartition(key: Any): Int = {
+            val h = key.asInstanceOf[(Long, Long)]._1.hashCode % parts
+            if (h < 0) h + parts else h
           }
-        }, preservesPartitioning = false)
-    }
+        }
+        new org.apache.spark.rdd.OrderedRDDFunctions[(Long, Long), Null,
+            ((Long, Long), Null)](keyed)(
+            Ordering.Tuple2[Long, Long], implicitly, implicitly, implicitly)
+          .repartitionAndSortWithinPartitions(byFirst)
+          .mapPartitions({ it =>
+            // the sort makes DEDUP free: identical pairs are adjacent,
+            // so skipping equal-consecutive rows keeps every round's
+            // working set a SET (multiplicity from duplicate emissions
+            // would otherwise grow additively per round — at 10⁹ edges
+            // that is real shuffle volume). Fixed-point semantics are
+            // unchanged: emissions are a function of the pair SET.
+            var hasPrev = false
+            var pa = 0L
+            var pb = 0L
+            it.flatMap { case (p @ (a, b), _) =>
+              if (hasPrev && a == pa && b == pb) Iterator.empty
+              else { hasPrev = true; pa = a; pb = b; Iterator.single(p) }
+            }
+          }, preservesPartitioning = false)
+      }
 
     /** Walk the sorted runs of one partition: `emit(u, minValue, v)`
       * per row, where minValue is the run's FIRST (smallest) value.
@@ -246,7 +274,9 @@ object ConnectedComponents {
         })
     }
 
-    var cur = first
+    // one partition: the coalesce is narrow, so round 1 reads the
+    // checkpointed pairs in place
+    var cur = if (onePartition) first.coalesce(1) else first
     var prevPersisted = first // the entry checkpoint; freed after round 1
     var prevChk = 0L
     var prevCnt = -1L
@@ -275,13 +305,60 @@ object ConnectedComponents {
     }
     if (!converged) throw new IllegalStateException(
       s"connected components did not converge in $maxRounds rounds")
+    // node → component min: each node's run in the partition it
+    // already sits in, or one reduceByKey over the exchanged rounds
+    val mins =
+      if (onePartition) sortedRuns(cur).mapPartitions(
+        runWalk { (u, m, _, isFirst) =>
+          if (isFirst) Iterator.single((u, m)) else Iterator.empty
+        })
+      else cur.reduceByKey((x: Long, y: Long) => math.min(x, y), parts)
     import spark.implicits._
-    val forest = spark.createDataset(
-      cur.reduceByKey((x: Long, y: Long) => math.min(x, y), parts))
-      .toDF("a", "b")
+    val forest = spark.createDataset(mins).toDF("a", "b")
       .localCheckpoint(true) // edge-sized; frees the loop's RDD cache
     prevPersisted.unpersist(false)
     forest
+  }
+
+  /** One partition's pairs sorted ascending by (a, b) with equal pairs
+    * dropped — the run order [[bigLoop]]'s sorted shuffle delivers,
+    * made inside the task. Primitive arrays throughout: the distinct
+    * values are sorted, each pair packs the ranks of its two values
+    * into one long (a's rank high, so the long order is the pair
+    * order), and one primitive sort orders the packed pairs: about five longs
+    * per pair in all. Ranks fit in 31 bits for any partition under 2³⁰
+    * pairs; this route sees at most 2 × 64k.
+    */
+  private def sortedInTask(
+      it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val as = Array.newBuilder[Long]
+    val bs = Array.newBuilder[Long]
+    it.foreach { case (a, b) => as += a; bs += b }
+    val (a, b) = (as.result(), bs.result())
+    val n = a.length
+    val vals = java.util.Arrays.copyOf(a, 2 * n)
+    System.arraycopy(b, 0, vals, n, n)
+    val d = sortDistinct(vals)
+    def rank(x: Long): Long = java.util.Arrays.binarySearch(vals, 0, d, x)
+    val packed = new Array[Long](n)
+    var i = 0
+    while (i < n) { packed(i) = (rank(a(i)) << 32) | rank(b(i)); i += 1 }
+    packed.iterator.take(sortDistinct(packed)).map(k =>
+      (vals((k >>> 32).toInt), vals((k & 0xFFFFFFFFL).toInt)))
+  }
+
+  /** Sort `xs` and move its distinct values to the front, in order;
+    * returns how many there are.
+    */
+  private def sortDistinct(xs: Array[Long]): Int = {
+    java.util.Arrays.sort(xs)
+    var d = 0
+    var i = 0
+    while (i < xs.length) {
+      if (d == 0 || xs(d - 1) != xs(i)) { xs(d) = xs(i); d += 1 }
+      i += 1
+    }
+    d
   }
 
   /** INCREMENTAL resolution: merge a batch of NEW edges into an
@@ -438,15 +515,19 @@ object ConnectedComponents {
       starLen: Long = 400L): DataFrame = {
     val c = Tables.load(spark, sfDir, "customer")
       .select(col("c_custkey").as("k"))
-    // head = block minimum (custkeys are 0-based, dense); every
-    // non-head attaches to it — the star
-    val edges = c.filter(pmod(col("k"), lit(starLen)) =!= 0L)
-      .select((col("k") - pmod(col("k"), lit(starLen))).as("a"),
-        col("k").as("b"))
     // a lone block head appears in no edge — label the full key set
     // (the q155 discipline)
-    withSizes(keyComponents(c.select(col("k").as("node")), edges))
+    withSizes(keyComponents(c.select(col("k").as("node")),
+      starEdges(c, starLen)))
   }
+
+  /** q162's edges over the keys `c`: every key attaches to its block
+    * head, the block minimum (custkeys are 0-based, dense) — the star.
+    */
+  private[graft] def starEdges(c: DataFrame, starLen: Long): DataFrame =
+    c.filter(pmod(col("k"), lit(starLen)) =!= 0L)
+      .select((col("k") - pmod(col("k"), lit(starLen))).as("a"),
+        col("k").as("b"))
 
   /** q157: INCREMENTAL resolution end to end — "yesterday" resolved
     * the corpus into half-blocks (a REAL [[components]] run over
@@ -470,16 +551,14 @@ object ConnectedComponents {
       half: Long = 600L): DataFrame = {
     val c = Tables.load(spark, sfDir, "customer")
       .select(col("c_custkey").as("k"))
-    val baseEdges = c.filter(pmod(col("k"), lit(half)) =!= 0L)
-      .select(col("k").as("a"),
-        (col("k") - pmod(col("k"), lit(half))).as("b"))
     // a lone tail block-head appears in no edge — complete the
     // labeling over the full key set (the q155 discipline). The
     // labeling MATERIALIZES (it is "yesterday's stored table"): the
     // merge below must read labels, never re-derive them from the
     // base edges — the cost contract a spec asserts with a scan
     // accumulator.
-    val labels = keyComponents(c.select(col("k").as("node")), baseEdges)
+    val labels = keyComponents(c.select(col("k").as("node")),
+        halfBlockEdges(c, half))
       .localCheckpoint(true)
     // today's batch: (k, k+1) at every even→odd half-block boundary,
     // kept only when the far endpoint exists
@@ -488,4 +567,12 @@ object ConnectedComponents {
       .join(c.select(col("k").as("b")), Seq("b"), "left_semi")
     withSizes(mergeComponents(labels, bridges))
   }
+
+  /** q157's base (yesterday's) edges over the keys `c`: every key
+    * attaches to the head of its half-block of `half` keys.
+    */
+  private[graft] def halfBlockEdges(c: DataFrame, half: Long): DataFrame =
+    c.filter(pmod(col("k"), lit(half)) =!= 0L)
+      .select(col("k").as("a"),
+        (col("k") - pmod(col("k"), lit(half))).as("b"))
 }

@@ -249,7 +249,14 @@ object Dedup {
     * early-exit merge-walk Jaccard reaches the threshold. One body for
     * every candidate generator (MinHash LSH, prefix filter), so the
     * slack/rounding contract in [[thresholdedJaccard]] cannot drift
-    * between paths. `docs` must carry (doc_id, hss sorted, sz).
+    * between paths. `docs` must carry (doc_id, hss sorted, sz). Both
+    * sides read `docs`: when it is a checkpointed frame and both sides
+    * broadcast it, AQE reuses one exchange for both; a cached frame
+    * cannot share, as AQE wraps each scan of it in a query stage of its
+    * own and the two exchanges no longer compare equal. A side whose
+    * candidate column carries a filter (q170's probes) gets that filter
+    * inferred onto its docs scan, so it broadcasts a smaller, different
+    * frame and the two sides are not one exchange.
     */
   private def verifyJaccard(candidates: DataFrame, docs: DataFrame,
       threshold: Double): DataFrame =
@@ -376,9 +383,13 @@ object Dedup {
       threshold: Double = 0.8): DataFrame = {
     val t = threshold - 1e-4
     // per-row once: distinct shingle hashes, value-sorted for the
-    // merge-walk verifier, plus the set size
+    // merge-walk verifier, plus the set size. Read by the df count, the
+    // prefix build and both verify sides; checkpointed (lazily — the df
+    // count's job stores it), not cached: AQE gives every scan of a
+    // cached frame its own query stage, so the verify join's two
+    // identical docs broadcasts would never be one reused exchange
     val docs = shingledDocs(Tables.load(spark, sfDir, "documents"))
-      .persist() // read by the df count, prefix build, both verify sides
+      .localCheckpoint(false)
 
     // global document frequency per shingle — the rare-first key
     val (dfreq, dfRows) = docFrequencies(docs)
@@ -396,9 +407,8 @@ object Dedup {
       .select(col("l.doc_id").as("ai"), col("r.doc_id").as("bi"))
       .distinct()
 
-    // lazy-return path: both caches release on the first consuming
-    // action of the returned frame
-    graft.plans.CacheRelease.afterFirstUse(docs)
+    // lazy-return path: the prefix cache releases on the first
+    // consuming action of the returned frame
     graft.plans.CacheRelease.afterFirstUse(prefix)
     Present.smallSorted(verifyJaccard(candidates, docs, threshold),
       "ai", "bi")

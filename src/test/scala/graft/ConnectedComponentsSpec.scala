@@ -26,9 +26,21 @@ class ConnectedComponentsSpec extends SparkSpec {
       .map(n => n -> find(n)).toMap
   }
 
-  private def run(es: Seq[(Long, Long)]): Map[Long, Long] =
+  /** `f` on the default route (every graph here is small enough to
+    * run its rounds in one partition) and with the exchanged rounds
+    * forced (bound 0): both must return the same value.
+    */
+  private def onBothRoutes[T](f: => T): T = {
+    val onePartition = f
+    val exchanged = ConnectedComponents.onePartitionBound.withValue(0L)(f)
+    assert(onePartition == exchanged,
+      "the one-partition and exchanged rounds disagree")
+    onePartition
+  }
+
+  private def run(es: Seq[(Long, Long)]): Map[Long, Long] = onBothRoutes(
     ConnectedComponents.components(es.toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
 
   test("components: random graphs match a union-find replica") {
     // deterministic pseudo-random edges over several densities
@@ -143,10 +155,9 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("q157: incremental chain merge equals the analytic doubled blocks") {
-    val df = ConnectedComponents
-      .incrementalChainComponents(spark, sf, half = 30L)
-    val got = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val got = onBothRoutes(ConnectedComponents
+      .incrementalChainComponents(spark, sf, half = 30L).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
     assert(got.nonEmpty)
     val n = got.length.toLong
     got.foreach { case (node, comp, size) =>
@@ -206,9 +217,9 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("q155: chain components match the analytic blocks") {
-    val df = ConnectedComponents.chainComponents(spark, sf, chainLen = 40L)
-    val rows = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val rows = onBothRoutes(ConnectedComponents
+      .chainComponents(spark, sf, chainLen = 40L).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
     assert(rows.nonEmpty)
     for ((node, comp, size) <- rows) {
       val blk = node / 40
@@ -220,9 +231,9 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("q162: hub-star components match the analytic blocks") {
-    val df = ConnectedComponents.starComponents(spark, sf, starLen = 50L)
-    val rows = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val rows = onBothRoutes(ConnectedComponents
+      .starComponents(spark, sf, starLen = 50L).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
     assert(rows.nonEmpty)
     val n = rows.length.toLong
     for ((node, comp, size) <- rows) {
@@ -231,5 +242,28 @@ class ConnectedComponentsSpec extends SparkSpec {
       assert(size == math.min(50L, n - blk * 50L), s"block $blk size $size")
     }
     assert(rows.map(_._1).distinct.length == rows.length)
+  }
+
+  test("forest: 64k pairs run in one partition, one pair more shuffles") {
+    // 256 stars of 256 leaves: 65,536 oriented pairs, two rounds; the
+    // extra pair is a component of its own
+    val stars = for (h <- 0L until 256L; j <- 1L to 256L)
+      yield (h * 1000L, h * 1000L + j)
+    val extra = stars :+ ((1000000L, 1000001L))
+    assert(stars.size == 65536)
+    for ((es, shuffles) <- Seq(stars -> false, extra -> true)) {
+      val edges = es.toDF("a", "b")
+      val (f, rec) = recordJobs(ConnectedComponents.forest(edges))
+      assert(rec.sites.count(_.startsWith("fold at ConnectedComponents")) == 2,
+        rec.sites.mkString("\n"))
+      assert((rec.shuffleBytes > 0L) == shuffles,
+        s"${es.size} pairs shuffled ${rec.shuffleBytes} B")
+      val forest = f.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val labels = ConnectedComponents.components(edges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = replica(es)
+      assert(labels == want, s"${es.size} pairs")
+      assert(forest == want.filter { case (n, c) => n != c })
+    }
   }
 }

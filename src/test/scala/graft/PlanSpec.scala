@@ -693,21 +693,47 @@ class PlanSpec extends SparkSpec {
   /** One curation-loop query, run to a noop sink the way the bench
     * runs it; the second of two runs is measured.
     */
-  private def curationJobs(name: String): Seq[String] = {
+  private def curationJobs(name: String): Seq[String] =
+    curationRun(name).sites
+
+  private def curationRun(name: String): JobRecord = {
     def once(): Unit = SparkEntry.queries(name)(spark, sf)
       .write.format("noop").mode("overwrite").save()
     once()
-    recordJobs(once())._2.sites
+    recordJobs(once())._2
   }
 
+  /** One fold job per contraction round. */
+  private def rounds(rec: JobRecord): Int =
+    rec.sites.count(_.startsWith("fold at ConnectedComponents"))
+
   test("q155: job budget, with the contraction's round count unchanged") {
-    val sites = curationJobs("q155_connected_components")
-    // one fold job per contraction round; a 150-node chain with skip-2
-    // shortcuts needs 8 double rounds (7 to contract, 1 to confirm)
-    val rounds = sites.count(_.startsWith("fold at ConnectedComponents"))
-    assert(rounds === 8, s"round count moved:\n${sites.mkString("\n")}")
+    val rec = curationRun("q155_connected_components")
+    val sites = rec.sites
+    // a 150-node chain with skip-2 shortcuts needs 8 double rounds (7
+    // to contract, 1 to confirm)
+    assert(rounds(rec) === 8, s"round count moved:\n${sites.mkString("\n")}")
     assert(sites.size <= 18,
       s"q155 ran ${sites.size} jobs:\n${sites.mkString("\n")}")
+    // 35 when every star phase shuffled into its one partition: a
+    // round was three stages, now one
+    assert(rec.stages <= 18, s"q155 ran ${rec.stages} stages")
+  }
+
+  test("q162/q157: their forests contract in two rounds with no shuffle") {
+    import graft.operators.ConnectedComponents
+    val c = graft.sources.Tables.load(spark, sf, "customer")
+      .select(org.apache.spark.sql.functions.col("c_custkey").as("k"))
+    // q162's hub stars and q157's half-block base graph are star forests
+    // already: one round to contract, one to confirm
+    for ((name, edges) <- Seq(
+        "q162" -> ConnectedComponents.starEdges(c, 400L),
+        "q157" -> ConnectedComponents.halfBlockEdges(c, 600L))) {
+      ConnectedComponents.forest(edges) // warm
+      val (_, rec) = recordJobs(ConnectedComponents.forest(edges))
+      assert(rounds(rec) === 2, s"$name:\n${rec.sites.mkString("\n")}")
+      assert(rec.shuffleBytes === 0L, s"$name shuffled")
+    }
   }
 
   test("q170: broadcast probe prefix keeps the job budget") {
@@ -787,9 +813,20 @@ class PlanSpec extends SparkSpec {
 
   test("q60: job budget for one df count and one prefix cut") {
     val sites = curationJobs("q60_prefix_jaccard_pairs")
-    // 11 when the df table is counted by an aggregate and collected
-    assert(sites.size <= 9,
+    // 11 when the df table is counted by an aggregate and collected; 9
+    // when the verify join broadcast the docs once per side
+    assert(sites.size <= 8,
       s"q60 ran ${sites.size} jobs:\n${sites.mkString("\n")}")
+    // both verify sides read one docs broadcast
+    val df = graft.operators.Dedup.prefixJaccardPairs(spark, sf)
+    df.collect()
+    val docsBroadcasts = allPlanNodes(df.queryExecution.executedPlan)
+      .count {
+        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
+          b.output.exists(_.name == "hss")
+        case _ => false
+      }
+    assert(docsBroadcasts === 1, s"docs broadcast $docsBroadcasts times:\n${planOf(df)}")
   }
 
   test("q147: packed and two-column pair plans share one output schema") {

@@ -124,14 +124,18 @@ class SkewFixtureSpec extends SparkSpec {
     // of chained blocks, plus isolated-ish pairs — the hub node's
     // neighborhood is the skew shape the sorted-run loop must stream
     // (a hub is a long contiguous run in the sorted shuffle, never a
-    // buffered set).
+    // buffered set). The graph is small enough to run its rounds in
+    // one partition; bound 0 forces the exchanged rounds, whose
+    // streaming is what a hub past that size relies on.
     val hub = (2L to 3001L).map(v => (1L, v))
     val chain = (10000L until 10500L).map(i => (i, i + 1))
     val pairs = (20000L until 20100L by 2).map(i => (i, i + 1))
     val es = (hub ++ chain ++ pairs).toSeq
-    val got = ConnectedComponents
+    def labels() = ConnectedComponents
       .components(es.toDF("a", "b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val got = labels()
+    val exchanged = ConnectedComponents.onePartitionBound.withValue(0L)(labels())
     // driver union-find replica
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
@@ -150,6 +154,7 @@ class SkewFixtureSpec extends SparkSpec {
     val want = es.flatMap(e => Seq(e._1, e._2)).distinct
       .map(n => n -> find(n)).toMap
     assert(got == want)
+    assert(exchanged == want)
     // and the hub really dominates: its degree is >50% of all edges
     assert(hub.size * 2 > es.size)
   }

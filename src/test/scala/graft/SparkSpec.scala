@@ -22,11 +22,13 @@ object TestSpark {
 
 /** The jobs a spec body started: each one's call site (the result
   * stage's name, e.g. "fold at ConnectedComponents.scala:N"), the
-  * shuffle bytes their tasks wrote and the result bytes their tasks
-  * sent to the driver (the sum of `taskMetrics.resultSize`).
+  * shuffle bytes their tasks wrote, the result bytes their tasks sent
+  * to the driver (the sum of `taskMetrics.resultSize`) and the stages
+  * that ran (a stage skipped because its shuffle output already
+  * existed is not counted).
   */
 case class JobRecord(sites: Seq[String], shuffleBytes: Long,
-    resultBytes: Long)
+    resultBytes: Long, stages: Int)
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
@@ -60,9 +62,13 @@ abstract class SparkSpec extends AnyFunSuite {
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
     val results = new java.util.concurrent.atomic.AtomicLong(0L)
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         sites.add(js.stageInfos.maxBy(_.stageId).name); ()
+      }
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet(); ()
       }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
         Option(te.taskMetrics).foreach { m =>
@@ -77,7 +83,8 @@ abstract class SparkSpec extends AnyFunSuite {
       val out = body
       org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
       import scala.jdk.CollectionConverters._
-      (out, JobRecord(sites.asScala.toSeq, shuffled.get(), results.get()))
+      (out, JobRecord(sites.asScala.toSeq, shuffled.get(), results.get(),
+        stages.get()))
     } finally sc.removeSparkListener(listener)
   }
 
