@@ -111,9 +111,15 @@ object HllFunctions {
   /** The one `hll_distinct` builder, over a RESOLVED `x`. */
   def hll_distinct(x: Expression, precision: Int,
       filter: Option[Expression] = None): Expression = {
-    val s = sketchAgg(x, precision).toAggregateExpression(false, filter)
-    HllSketchEstimate(new HllUnion(s, s))
+    canonicalEstimate(
+      sketchAgg(x, precision).toAggregateExpression(false, filter))
   }
+
+  /** The canonical finalizer over a sketch `s`:
+    * `hll_sketch_estimate(hll_union(s, s))`.
+    */
+  def canonicalEstimate(s: Expression): Expression =
+    HllSketchEstimate(new HllUnion(s, s))
 
   /** The sketch a summary stores for a `hll_distinct(x)` measure. */
   def sketchAgg(x: Expression, precision: Int): HllSketchAgg =

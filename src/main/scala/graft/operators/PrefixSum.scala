@@ -13,16 +13,26 @@ import org.apache.spark.sql.functions._
   * `spark.sql.autoBroadcastJoinThreshold` (and that threshold is > 0,
   * so −1 turns the route off, exactly as it does broadcast joins):
   *
-  *  1. one job collects the `(key, value)` pairs;
-  *  2. the driver sorts them by key, prefix-scans them into cums and
-  *     derives the shard totals from the same pairs;
+  *  1. one job: each task reads its `(key, value)` pairs into two
+  *     primitive arrays and sends them to the driver;
+  *  2. the driver sorts the keys (`java.util.Arrays.sort`, no boxing),
+  *     places each value at its key's slot and, in one linear pass,
+  *     prefix-scans them into cums and sums the shard totals (truncating
+  *     `div` is monotone, so a shard's keys are contiguous);
   *  3. the sorted keys and cums go out as one broadcast, and each row
   *     finds its cum by binary search in a projection — no exchange,
   *     no sort, no window.
   *
-  * A repeated key falls back to the shard route (the only one that
-  * tolerates ties). An estimate that is too low fails the collect at
-  * `spark.driver.maxResultSize`, as a mis-estimated broadcast join does.
+  * The estimate can under-state the pairs (an `explode` keeps its
+  * input's size estimate), so each task also bounds what it holds: past
+  * its share (threshold / 16 B / partitions) of pairs it stops reading
+  * and reports an overflow, and the call takes the shard route. The
+  * bound is per task, so it depends on how evenly the pairs are
+  * spread: a frame well under the threshold whose pairs crowd into one
+  * task overflows that task and takes the shard route. A repeated key
+  * falls back to the shard route too (the only one that tolerates
+  * ties). A null key is reported by its task and rejected on the
+  * driver.
   *
   * '''Shard route''' — everything else, two passes:
   *
@@ -49,7 +59,8 @@ import org.apache.spark.sql.functions._
 object PrefixSum {
 
   /** Append `outCol` = running sum of `value` over ascending `orderCol`
-    * (a unique, non-negative numeric key). Output type is long. NULL
+    * (a numeric key, unique unless the shard route runs — it is the
+    * one that tolerates ties). Output type is long. NULL
     * `value`s contribute 0 (the window and the shard totals must agree
     * on this, so it is coalesced once, up front).
     */
@@ -77,7 +88,8 @@ object PrefixSum {
       .autoBroadcastJoinThreshold
     val small = threshold > 0 &&
       pairs.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
-    (if (small) broadcastRoute(df, pairs, orderCol, outCol, shardWidth)
+    (if (small)
+       broadcastRoute(df, pairs, orderCol, outCol, shardWidth, threshold)
      else None)
       .getOrElse(shardRoute(df, orderCol, v, outCol, shardWidth))
   }
@@ -85,35 +97,99 @@ object PrefixSum {
   private def nullKey(orderCol: String) = new IllegalArgumentException(
     s"prefix sum order column `$orderCol` holds a null key")
 
-  /** None when a key repeats: ties need the shard route's window. */
+  /** Bytes one (key, value) pair takes on the driver as two long
+    * arrays: the unit of the broadcast route's per-task bound.
+    */
+  private val PairBytes = 16L
+
+  /** What one broadcast-route task sends the driver. */
+  private sealed trait Partial
+  /** The task's pairs, in the order it read them. */
+  private final case class Pairs(keys: Array[Long], vals: Array[Long])
+      extends Partial
+  /** The task passed its share of the pair bound. */
+  private case object Overflow extends Partial
+  /** The task read a null key. */
+  private case object NullKey extends Partial
+
+  /** None when a task passed its share of `threshold` / 16 B pairs or a
+    * key repeats: the shard route takes both.
+    */
   private def broadcastRoute(df: DataFrame, pairs: DataFrame,
-      orderCol: String, outCol: String, shardWidth: Long)
+      orderCol: String, outCol: String, shardWidth: Long, threshold: Long)
       : Option[(DataFrame, Seq[(Long, Long)])] = {
-    val kv = pairs.collect().map { r =>
-      if (r.isNullAt(0)) throw nullKey(orderCol)
-      (r.getLong(0), r.getLong(1))
-    }.sortBy(_._1)
-    val keys = kv.map(_._1)
-    if ((1 until keys.length).exists(i => keys(i) == keys(i - 1))) None
-    else {
-      val cums = kv.scanLeft(0L)(_ + _._2).tail
-      val totals = kv.groupMapReduce(_._1 / shardWidth)(_._2)(_ + _)
-        .toSeq.sortBy(_._1)
-      // released by Spark's ContextCleaner once the frame is unreachable
-      val index = df.sparkSession.sparkContext.broadcast((keys, cums))
-      // boxed result: `outCol` is nullable, as the shard route's
-      // window sum is, so both routes share one schema
-      val lookup = udf { (k: Long) =>
-        val (ks, cs) = index.value
-        val i = java.util.Arrays.binarySearch(ks, k)
-        if (i < 0) throw new IllegalStateException(
-          s"prefix sum key $k was not in the collected key index: the " +
-            s"input of `$orderCol` changed between its two reads")
-        java.lang.Long.valueOf(cs(i))
+    val rows = pairs.queryExecution.toRdd
+    val share = threshold / PairBytes / math.max(1, rows.getNumPartitions)
+    val partials = rows.mapPartitions { it =>
+      var ks = new Array[Long](1024)
+      var vs = new Array[Long](1024)
+      var n = 0
+      var nullSeen = false
+      while (!nullSeen && n <= share && it.hasNext) {
+        val r = it.next()
+        if (r.isNullAt(0)) nullSeen = true
+        else {
+          if (n == ks.length) {
+            ks = java.util.Arrays.copyOf(ks, 2 * n)
+            vs = java.util.Arrays.copyOf(vs, 2 * n)
+          }
+          ks(n) = r.getLong(0); vs(n) = r.getLong(1); n += 1
+        }
       }
-      Some((df.withColumn(outCol, lookup(col(orderCol).cast("long"))),
-        totals))
+      Iterator.single[Partial](
+        if (nullSeen) NullKey
+        else if (n > share) Overflow
+        else Pairs(java.util.Arrays.copyOf(ks, n),
+          java.util.Arrays.copyOf(vs, n)))
+    }.collect()
+    if (partials.contains(NullKey)) throw nullKey(orderCol)
+    if (partials.contains(Overflow)) return None
+    val runs = partials.collect { case p: Pairs => p }
+    val keys = Array.concat(runs.map(_.keys).toSeq: _*)
+    java.util.Arrays.sort(keys)
+    if ((1 until keys.length).exists(i => keys(i) == keys(i - 1))) return None
+    // the keys are unique: each pair's value goes to its key's slot
+    val vals = new Array[Long](keys.length)
+    runs.foreach { r =>
+      r.keys.indices.foreach { j =>
+        vals(java.util.Arrays.binarySearch(keys, r.keys(j))) = r.vals(j)
+      }
     }
+    // one pass: cums and shard totals — truncating `div` is monotone,
+    // so each shard's keys are contiguous in key order
+    val cums = new Array[Long](keys.length)
+    val totals = Seq.newBuilder[(Long, Long)]
+    var running = 0L
+    var shard = 0L
+    var shardSum = 0L
+    var i = 0
+    while (i < keys.length) {
+      val s = keys(i) / shardWidth
+      if (i > 0 && s != shard) {
+        totals += ((shard, shardSum))
+        shardSum = 0L
+      }
+      shard = s
+      shardSum += vals(i)
+      running += vals(i)
+      cums(i) = running
+      i += 1
+    }
+    if (keys.nonEmpty) totals += ((shard, shardSum))
+    // released by Spark's ContextCleaner once the frame is unreachable
+    val index = df.sparkSession.sparkContext.broadcast((keys, cums))
+    // boxed result: `outCol` is nullable, as the shard route's
+    // window sum is, so both routes share one schema
+    val lookup = udf { (k: Long) =>
+      val (ks, cs) = index.value
+      val i = java.util.Arrays.binarySearch(ks, k)
+      if (i < 0) throw new IllegalStateException(
+        s"prefix sum key $k was not in the collected key index: the " +
+          s"input of `$orderCol` changed between its two reads")
+      java.lang.Long.valueOf(cs(i))
+    }
+    Some((df.withColumn(outCol, lookup(col(orderCol).cast("long"))),
+      totals.result()))
   }
 
   private def shardRoute(df: DataFrame, orderCol: String, v: Column,

@@ -1,8 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.datasketches.hll.{HllSketch => DataSketchesHll, TgtHllType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
 import org.apache.spark.sql.functions._
-import graft.functions.HllFunctions.hll_distinct
+import org.apache.spark.sql.types.BinaryType
+import graft.functions.HllFunctions
 import graft.sources.Tables
 
 /** Per-column NDV estimation and the hash-domain sizing rule built on
@@ -11,22 +14,57 @@ import graft.sources.Tables
   * size each categorical hash domain as `ndv * 5`
   * (trainer.py:264).
   *
-  * All columns are sketched in ONE scan (one `hll_distinct` per
-  * column in a single aggregate — Spark's DataSketches HLL at
-  * precision 14), so analyzing a 40-column 100 TB table costs the
-  * same pass a count(*) does. [[GraftAnalyze]] reads its NDVs from
-  * the same estimate.
+  * All columns are sketched in ONE job (Spark's DataSketches HLL at
+  * precision 14), so analyzing a 40-column 100 TB table costs the same
+  * pass a count(*) does. [[GraftAnalyze]] reads its NDVs from the same
+  * estimate.
+  *
+  * Spark's `HllSketchAgg` is bound to the selected columns'
+  * `InternalRow`s; each task builds one sketch per column and sends it
+  * as a compact HLL_4 sketch (the same register values as the
+  * aggregate's HLL_8 buffer, in fewer bytes). A
+  * `treeAggregate` unions the partials: up to 5 partitions that is the
+  * result stage's fold on the driver, with no exchange; past that it
+  * adds a level of unions on the executors, so the driver receives
+  * about √partitions sketches. Each column is finalized on the driver
+  * as the canonical `hll_distinct` estimate,
+  * `hll_sketch_estimate(hll_union(s, s))`.
   */
 object CardinalityEstimator {
 
   val BucketMultiplier = 5 // trainer.py:264
 
-  /** One-pass approximate NDV for each named column. */
+  /** Approximate NDV for each named column, in one job. */
   def vocabSizes(df: DataFrame, cols: Seq[String]): Map[String, Long] = {
-    val aggs: Seq[Column] = cols.map(c => hll_distinct(col(c)).as(c))
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    cols.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap
+    val selected = df.select(cols.map(col): _*)
+    val aggs = selected.schema.fields.zipWithIndex.map { case (f, i) =>
+      HllFunctions.sketchAgg(BoundReference(i, f.dataType, f.nullable),
+        HllFunctions.DefaultPrecision)
+    }
+    val empty = aggs.map(a => compact(a.createAggregationBuffer()))
+    val union = (a: Array[Array[Byte]], b: Array[Array[Byte]]) =>
+      aggs.indices.map { i =>
+        compact(aggs(i).merge(DataSketchesHll.heapify(a(i)),
+          DataSketchesHll.heapify(b(i))))
+      }.toArray
+    val sketches = selected.queryExecution.toRdd.mapPartitions { rows =>
+      val buffers = aggs.map(_.createAggregationBuffer())
+      rows.foreach { row =>
+        var i = 0
+        while (i < aggs.length) {
+          buffers(i) = aggs(i).update(buffers(i), row); i += 1
+        }
+      }
+      Iterator.single(buffers.map(compact))
+    }.treeAggregate(empty)(union, union)
+    cols.zip(sketches.map { s =>
+      HllFunctions.canonicalEstimate(Literal(s, BinaryType)).eval()
+        .asInstanceOf[Long]
+    }).toMap
   }
+
+  private def compact(sketch: DataSketchesHll): Array[Byte] =
+    sketch.copyAs(TgtHllType.HLL_4).toCompactByteArray
 
   /** The reference's sizing rule: hash-bucket domain = ndv × 5. */
   def bucketSizes(vocab: Map[String, Long]): Map[String, Long] =

@@ -118,9 +118,13 @@ object RecordStream {
     Some(payload)
   }
 
+  /** A record reader over `raw`; a gzipped stream inflates from a
+    * 64 KiB input buffer (GZIPInputStream's default is 512 B).
+    */
   def openRead(raw: InputStream, gz: Boolean): DataInputStream =
     new DataInputStream(
-      if (gz) new BufferedInputStream(new GZIPInputStream(raw), 1 << 16)
+      if (gz) new BufferedInputStream(new GZIPInputStream(raw, 1 << 16),
+        1 << 16)
       else new BufferedInputStream(raw, 1 << 16))
 
   def openWrite(raw: OutputStream, gz: Boolean): DataOutputStream =

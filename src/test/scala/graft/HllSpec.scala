@@ -176,6 +176,67 @@ class HllSpec extends SparkSpec {
     assert(buckets("event_type") == 25L) // ndv*5, trainer.py:264
   }
 
+  /** [[CardinalityEstimator.vocabSizes]] next to the reference, one
+    * `hll_distinct` aggregate over the same columns: equal maps,
+    * returned with the `vocabSizes` call's job record.
+    */
+  private def vocabAgainstAggregate(df: org.apache.spark.sql.DataFrame)
+      : (Map[String, Long], JobRecord) = {
+    val cols = df.columns.toSeq
+    val (got, rec) = recordJobs(CardinalityEstimator.vocabSizes(df, cols))
+    val aggs = cols.map(c => HllFunctions.hll_distinct(col(c)))
+    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val want = cols.indices.map(i => cols(i) -> row.getLong(i)).toMap
+    assert(got == want, s"vocabSizes $got, hll_distinct $want")
+    (got, rec)
+  }
+
+  private def typedColumns(parts: Int) =
+    spark.range(0L, 20000L, 1L, parts).select(
+      (col("id") % 1500).cast("int").as("i"),
+      (col("id") * 7919L % 12000L).as("l"),
+      concat(lit("s"), (col("id") % 900).cast("string")).as("s"),
+      encode(concat(lit("b"), (col("id") % 300).cast("string")), "UTF-8")
+        .as("bin"),
+      ((col("id") % 2500).cast("double") / 4).as("d"),
+      date_add(lit("2020-01-01").cast("date"), (col("id") % 700).cast("int"))
+        .as("dt"),
+      lit(null).cast("string").as("nul"),
+      // '' is not counted (DataSketches skips empty strings), and NULL
+      // never is
+      when(col("id") % 3 === 0, lit("")).otherwise(lit(null).cast("string"))
+        .as("blank"))
+
+  test("vocabSizes equals hll_distinct over int, long, string, binary, " +
+      "double, date, all-null and '' columns, in one job") {
+    val exact = Map("i" -> 1500L, "l" -> 12000L, "s" -> 900L,
+      "bin" -> 300L, "d" -> 2500L, "dt" -> 700L)
+    for (parts <- Seq(1, 4, 8, 40)) {
+      val (got, rec) = vocabAgainstAggregate(typedColumns(parts))
+      // up to 5 partials the driver unions them all; past that the tree
+      // adds one level of unions on the executors
+      if (parts <= 5) assert(rec.sites.size == 1 && rec.stages == 1 &&
+        rec.shuffleBytes == 0L, s"$parts partitions: vocabSizes ran $rec")
+      else assert(rec.sites.size == 1 && rec.stages == 2,
+        s"$parts partitions: vocabSizes ran $rec")
+      exact.foreach { case (c, n) =>
+        assert(math.abs(got(c) - n) <= math.max(2, 0.03 * n),
+          s"$parts partitions, $c: ${got(c)} vs $n")
+      }
+      assert(got("nul") == 0L && got("blank") == 0L, got)
+    }
+  }
+
+  test("vocabSizes: an empty frame and a zero-partition frame count 0") {
+    val empty = typedColumns(4).filter(col("i") < 0)
+    val noParts = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      typedColumns(1).schema)
+    assert(noParts.queryExecution.toRdd.getNumPartitions == 0)
+    for (df <- Seq(empty, noParts))
+      assert(vocabAgainstAggregate(df)._1.values.forall(_ == 0L))
+  }
+
   test("vocabTable query returns one row per analyzed column") {
     val df = plans.CardinalityEstimator.vocabTable(spark, sf)
     val rows = df.collect()

@@ -97,6 +97,56 @@ class PrefixSumSpec extends SparkSpec {
     assert(got.totals == Seq((0L, 4L), (1L, 3L), (2L, 1L)))
   }
 
+  test("an estimate under the threshold over more pairs than it bounds " +
+      "takes the shard route") {
+    // explode keeps its input's size estimate: 4 rows estimated, 4,000
+    // pairs read
+    val df = spark.range(0L, 4L, 1L, 2)
+      .select(explode(sequence(col("id") * 1000L, col("id") * 1000L + 999L))
+        .as("k"))
+      .select(col("k"), (col("k") % 7).as("x"))
+    val threshold = 16L * 1000L // 1,000 pairs, a quarter of the frame's
+    val estimate = df.select(col("k"), col("x").cast("long"))
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(estimate <= threshold, s"the estimate $estimate is not under")
+    val broadcast = bothRoutes(df, col("x"), 256L)
+    val guarded = withBroadcastThreshold(threshold)(run(df, col("x"), 256L))
+    assert(guarded.windowed,
+      "an overflowing task did not take the shard route")
+    assert(guarded.cums == broadcast.cums)
+    assert(guarded.totals == broadcast.totals)
+  }
+
+  test("a key repeated across two tasks takes the shard route") {
+    // range partitions read [0, 3) and [3, 6): both tasks read key 2,
+    // and neither repeats a key of its own
+    val df = spark.range(0L, 6L, 1L, 2)
+      .select(when(col("id") === 3L, 2L).otherwise(col("id")).as("k"))
+    val got = run(df, lit(1), 4L)
+    val shard = withoutBroadcast(run(df, lit(1), 4L))
+    assert(got.windowed, "a key repeated across tasks must take the window")
+    assert(shard.windowed)
+    assert(got.cums.sorted == (1L to 6L))
+    assert(shard.cums.sorted == got.cums.sorted)
+    assert(got.totals == Seq((0L, 4L), (1L, 2L)))
+    assert(shard.totals == got.totals)
+  }
+
+  test("negative keys: truncating div keeps each shard's keys " +
+      "contiguous, from Long.MinValue to Long.MaxValue") {
+    import spark.implicits._
+    val rng = new scala.util.Random(11)
+    val keys = Long.MinValue +: (-500L until 500L).map(_ * 3L) :+ Long.MaxValue
+    val rows = keys.map(k => (k, rng.nextInt(100).toLong))
+    val width = 64L
+    val got = bothRoutes(rows.toDF("k", "x").repartition(5), col("x"), width)
+    // shard 0 holds keys -63..63, so shard ids are not floor(k / width)
+    val want = rows.groupBy(_._1 / width).view
+      .mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
+    assert(got.totals == want)
+    assert(got.cums == rows.scanLeft(0L)(_ + _._2).tail)
+  }
+
   test("a null order key is rejected by name on both routes") {
     import spark.implicits._
     val df = Seq((Some(0L), 1L), (None, 2L), (Some(4L), 3L)).toDF("k", "x")

@@ -22,13 +22,14 @@ object TestSpark {
 
 /** The jobs a spec body started: each one's call site (the result
   * stage's name, e.g. "fold at ConnectedComponents.scala:N"), the
-  * shuffle bytes their tasks wrote, the result bytes their tasks sent
+  * shuffle bytes their tasks wrote and read (read + write is what the
+  * benchmark's `shuffle_mb` counts), the result bytes their tasks sent
   * to the driver (the sum of `taskMetrics.resultSize`) and the stages
   * that ran (a stage skipped because its shuffle output already
   * existed is not counted).
   */
 case class JobRecord(sites: Seq[String], shuffleBytes: Long,
-    resultBytes: Long, stages: Int)
+    shuffleReadBytes: Long, resultBytes: Long, stages: Int)
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
@@ -61,6 +62,7 @@ abstract class SparkSpec extends AnyFunSuite {
     import org.apache.spark.scheduler._
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
+    val shuffleRead = new java.util.concurrent.atomic.AtomicLong(0L)
     val results = new java.util.concurrent.atomic.AtomicLong(0L)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
@@ -73,6 +75,7 @@ abstract class SparkSpec extends AnyFunSuite {
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
         Option(te.taskMetrics).foreach { m =>
           shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
           results.addAndGet(m.resultSize)
         }
     }
@@ -83,8 +86,8 @@ abstract class SparkSpec extends AnyFunSuite {
       val out = body
       org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark, 30000L)
       import scala.jdk.CollectionConverters._
-      (out, JobRecord(sites.asScala.toSeq, shuffled.get(), results.get(),
-        stages.get()))
+      (out, JobRecord(sites.asScala.toSeq, shuffled.get(),
+        shuffleRead.get(), results.get(), stages.get()))
     } finally sc.removeSparkListener(listener)
   }
 
