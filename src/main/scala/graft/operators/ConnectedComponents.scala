@@ -32,24 +32,23 @@ import graft.sources.Tables
   * (count + wrap-around sum of pair hashes) that rides each round's
   * ONE materializing action. Edge lists stay edge-sized throughout.
   *
-  * ONE physical regime: the contraction runs over the raw pair RDD
-  * as SECONDARY-SORT star rounds ([[bigLoop]]) — each star phase reads
-  * its pairs as contiguous ascending runs that carry min(Γ(u)) in
-  * their first row, so the phase needs no join and no per-key state.
-  * Where the runs come from follows the pair count alone. A graph of
-  * at most 64k oriented pairs — the count that already sizes its
-  * rounds to one partition — sorts that partition inside each task
-  * and plans no exchange, the RDD counterpart of Catalyst planning no
-  * exchange over a single-partition child. A larger graph runs each
-  * phase as one `repartitionAndSortWithinPartitions` shuffle. Hub-safe
-  * by construction either way: the in-task sort holds at most
-  * 2 × 64k pairs (2 MB of longs) whatever the degrees, and the
-  * shuffle's sort spills while the run walk streams, so a 10⁸-degree
-  * hub is just a long sorted run, never a buffered set (both routes
-  * proven against a union-find replica on a synthetic-hub fixture in
-  * SkewFixtureSpec). A second small-graph regime (groupByKey
-  * adjacency sets behind an edge bound + degree probe) existed
-  * through round 9 and was deleted after the sorted-run loop measured
+  * ONE algorithm, two routes by pair count ([[bigLoop]]): each star
+  * phase reads its pairs as SECONDARY-SORT runs that carry min(Γ(u))
+  * in their first row, so the phase needs no join and no per-key
+  * state. A graph of at most 64k oriented pairs runs every round and
+  * the final min-reduce inside ONE task of ONE job, and its star
+  * forest comes back to the driver as a local relation, so the
+  * labeling join broadcasts it. A larger graph runs one job per round
+  * over the pair RDD, each phase one
+  * `repartitionAndSortWithinPartitions` shuffle, and checkpoints its
+  * forest. Hub-safe by construction either way: the in-task sort
+  * holds at most 2 × 64k pairs (2 MB of longs) whatever the degrees,
+  * and the shuffle's sort spills while the run walk streams, so a
+  * 10⁸-degree hub is just a long sorted run, never a buffered set
+  * (both routes proven against a union-find replica on a
+  * synthetic-hub fixture in SkewFixtureSpec). A second small-graph
+  * regime (groupByKey adjacency sets behind an edge bound + degree
+  * probe) existed through round 9 and was deleted after the sorted-run loop measured
   * FASTER on the small regime's own fixture (PROFILE.md round-9
   * "regime crossover, measured": forced-big 2.58 s vs small 2.78 s)
   * — one loop, one hub-safety argument, no probe job per query.
@@ -85,17 +84,19 @@ object ConnectedComponents {
     keyComponents(nodes, edges)
   }
 
-  /** The contraction's fixed point as a checkpointed star forest
-    * (a: node, b: component min) — one row per node that is NOT its
-    * own component min. Input columns (a, b); self-loops and
-    * duplicates are tolerated.
+  /** The contraction's fixed point as a star forest (a: node,
+    * b: component min, both non-null longs) — one row per node that
+    * is NOT its own component min: a local relation when the graph ran
+    * its rounds inside one task, a checkpointed frame otherwise
+    * ([[bigLoop]]). Input columns (a, b); self-loops and duplicates are
+    * tolerated.
     */
   private[graft] def forest(edges: DataFrame): DataFrame = {
     // orient (big, small) and drop self-loops — the invariant every
     // round preserves. No dedup here: round 1's sorted runs skip
     // equal adjacent pairs, so duplicates die in its first phase.
     // The RDD-level checkpoint materializes in the same job that
-    // counts the pairs for the round partitioning.
+    // counts the pairs for the route and the round partitioning.
     val first = edges
       .select(greatest(col("a"), col("b")).cast("long").as("a"),
         least(col("a"), col("b")).cast("long").as("b"))
@@ -103,6 +104,21 @@ object ConnectedComponents {
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
     first.localCheckpoint()
     bigLoop(edges.sparkSession, first, first.count())
+  }
+
+  /** Where [[bigLoop]] reports each run's round count, when a caller of
+    * [[countingRounds]] is listening on this thread.
+    */
+  private val roundLog = new scala.util.DynamicVariable[
+    Option[scala.collection.mutable.Buffer[Int]]](None)
+
+  /** `body`'s value with the round count of every contraction loop it
+    * ran, in order — the loop's own report, whichever route it took.
+    */
+  private[graft] def countingRounds[T](body: => T): (T, Seq[Int]) = {
+    val log = scala.collection.mutable.Buffer.empty[Int]
+    val out = roundLog.withValue(Some(log))(body)
+    (out, log.toSeq)
   }
 
   /** (node, component) for every node of `keys` (column `node`),
@@ -128,55 +144,69 @@ object ConnectedComponents {
 
   /** Oriented pairs per round partition: the contraction spreads past
     * one partition only when its pair count exceeds this (64k pairs,
-    * 1 MB of longs), and a graph of at most this many pairs runs its
-    * rounds inside one partition with no exchange ([[bigLoop]]).
+    * 1 MB of longs), and a graph of at most this many pairs runs all
+    * its rounds inside one task ([[bigLoop]]).
     */
   private val PairsPerPartition: Long = 1L << 16
 
   /** The pair count up to which [[bigLoop]] runs its rounds inside one
-    * partition; specs set 0 to force the exchanged rounds on any graph.
+    * task; specs set 0 to force the exchanged rounds on any graph.
     */
   private[graft] val onePartitionBound =
     new scala.util.DynamicVariable[Long](PairsPerPartition)
 
+  /** ≫ log₂ of any conceivable node count. */
+  private val MaxRounds = 64
+
   /** The contraction loop: one LARGE-STAR + SMALL-STAR double round per
-    * materialization, over the raw pair RDD. Each star phase reads its
-    * pairs as SORTED RUNS ([[sortedRuns]]): per node u, its partners
-    * as one contiguous ascending run whose first value is min(Γ(u)), so
-    * a phase is one streamed walk ([[runWalk]]) with no join and no
-    * per-key state. Where the runs come from depends only on the pair
-    * count, the way Catalyst plans no exchange over a single-partition
-    * child:
+    * step, until the (count, checksum) fixed-point test repeats. Each
+    * star phase reads its pairs as SORTED RUNS: per node u, its
+    * partners as one contiguous ascending run whose first value is
+    * min(Γ(u)), so a phase is one streamed walk ([[runWalk]]) with no
+    * join and no per-key state. Where the runs come from depends only
+    * on the pair count:
     *
-    *  - at most [[onePartitionBound]] pairs (64k): the checkpointed
-    *    pairs are coalesced to one partition once, and every phase
-    *    sorts that partition inside its task. A round is one stage, and
-    *    the final min-reduce to the star forest runs in the same
-    *    partition. No star phase emits more distinct pairs than it
-    *    reads, so a sort holds at most 2 × 64k pairs (2 MB of longs,
-    *    the large-star phase's bidirected input) and a hub of any
-    *    degree costs bounded memory;
-    *  - above it: each phase is one `repartitionAndSortWithinPartitions`
-    *    shuffle whose sort spills and whose walk streams, so a
-    *    10⁸-degree hub is a long sorted run, never a buffered set, and
-    *    the forest comes from one `reduceByKey(min)`.
+    *  - at most [[onePartitionBound]] pairs (64k): ONE job over the
+    *    checkpointed pairs coalesced to one partition runs every round
+    *    inside its task ([[contractInTask]]: primitive long arrays,
+    *    each phase's runs from [[sortedInTask]]) and the final
+    *    min-reduce to the star forest, and returns the forest and the
+    *    round count to the driver. The forest comes back as a local
+    *    relation, so a labeling join over it plans a broadcast. No
+    *    star phase emits more distinct pairs than it reads, so a sort
+    *    holds at most 2 × 64k pairs (2 MB of longs, the large-star
+    *    phase's bidirected input), and so does the returned forest: a
+    *    hub of any degree costs bounded memory;
+    *  - above it: each round is one job whose phases are each one
+    *    `repartitionAndSortWithinPartitions` shuffle — the sort spills
+    *    and the walk streams, so a 10⁸-degree hub is a long sorted
+    *    run, never a buffered set — and the forest comes from one
+    *    `reduceByKey(min)`, checkpointed.
     *
-    * This replaced an equivalent DataFrame/AQE spelling: the round
-    * plan is structurally identical every iteration, yet Catalyst
-    * re-planned it inside every localCheckpoint at ~400 ms/round of
-    * pure scheduling latency on a 60k-edge forced run (q162) —
-    * measured twice as large as the actual per-round compute. The RDD
-    * round is the same algebra with zero planning: two sorted phases
-    * and a checksum fold riding the materializing action. Dup edges
-    * are tolerated throughout — the sorted runs drop equal adjacent
-    * pairs, so every phase works on a pair SET — and at the edge-set
-    * fixed point the output self-canonicalizes (the small-star left
-    * branch emits ONE row per node and the right branch empties), so
-    * the checksum repeats verbatim.
+    * The exchanged rounds replaced an equivalent DataFrame/AQE
+    * spelling: the round plan is structurally identical every
+    * iteration, yet Catalyst re-planned it inside every localCheckpoint
+    * at ~400 ms/round of pure scheduling latency on a 60k-edge forced
+    * run (q162) — measured twice as large as the actual per-round
+    * compute. The RDD round is the same algebra with zero planning: two
+    * sorted phases and a checksum fold riding the materializing action.
+    * Dup edges are tolerated throughout — the sorted runs drop equal
+    * adjacent pairs, so every phase works on a pair SET — and at the
+    * edge-set fixed point the output self-canonicalizes (the
+    * small-star left branch emits ONE row per node and the right
+    * branch empties), so the checksum repeats verbatim. Both routes
+    * walk the same runs, so they take the same rounds.
     */
   private def bigLoop(spark: SparkSession, first: RDD[(Long, Long)],
-      nEdges: Long): DataFrame = {
-    val onePartition = nEdges <= onePartitionBound.value
+      nEdges: Long): DataFrame =
+    if (nEdges <= onePartitionBound.value) inTaskForest(spark, first)
+    else exchangedForest(spark, first, nEdges)
+
+  /** [[bigLoop]]'s route above [[onePartitionBound]] pairs: one job per
+    * round, each star phase one sorted shuffle.
+    */
+  private def exchangedForest(spark: SparkSession,
+      first: RDD[(Long, Long)], nEdges: Long): DataFrame = {
     // data-proportional parallelism for the exchanged rounds, the job
     // AQE did for the DataFrame spelling: the default parallelism past
     // 64k pairs per partition, and past ~1M oriented pairs (16 MB) per
@@ -190,111 +220,62 @@ object ConnectedComponents {
     /** SECONDARY SORT: each node's rows as a CONTIGUOUS ASCENDING run,
       * equal pairs dropped — the run's first value IS min(Γ(u)), so a
       * star phase needs no second pass, no join, and no per-key state.
-      * One partition sorts inside its task ([[sortedInTask]]); more go
-      * through one sorted shuffle, which replaced a reduceByKey(min) +
-      * co-partitioned stream-join spelling (two shuffles and a
-      * recomputed zip stage per star), halving the round from six
-      * stages to three (measured 180 → ~95 ms/round on the forced q162
-      * run). Hub-safe either way: the one-partition sort holds at most
-      * 2 × 64k pairs, and the shuffle's sort spills while the run walk
-      * streams — a 10⁸-degree hub is just a long run, never a buffered
-      * HashSet.
+      * One sorted shuffle replaced a reduceByKey(min) + co-partitioned
+      * stream-join spelling (two shuffles and a recomputed zip stage
+      * per star), halving the round from six stages to three (measured
+      * 180 → ~95 ms/round on the forced q162 run). Hub-safe: the
+      * shuffle's sort spills while the run walk streams — a
+      * 10⁸-degree hub is just a long run, never a buffered HashSet.
       */
-    def sortedRuns(in: RDD[(Long, Long)]): RDD[(Long, Long)] =
-      if (onePartition) in.mapPartitions(sortedInTask)
-      else {
-        val keyed = in.map(p => (p, null.asInstanceOf[Null]))
-        val byFirst = new org.apache.spark.Partitioner {
-          override def numPartitions: Int = parts
-          override def getPartition(key: Any): Int = {
-            val h = key.asInstanceOf[(Long, Long)]._1.hashCode % parts
-            if (h < 0) h + parts else h
-          }
+    def sortedRuns(in: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+      val keyed = in.map(p => (p, null.asInstanceOf[Null]))
+      val byFirst = new org.apache.spark.Partitioner {
+        override def numPartitions: Int = parts
+        override def getPartition(key: Any): Int = {
+          val h = key.asInstanceOf[(Long, Long)]._1.hashCode % parts
+          if (h < 0) h + parts else h
         }
-        new org.apache.spark.rdd.OrderedRDDFunctions[(Long, Long), Null,
-            ((Long, Long), Null)](keyed)(
-            Ordering.Tuple2[Long, Long], implicitly, implicitly, implicitly)
-          .repartitionAndSortWithinPartitions(byFirst)
-          .mapPartitions({ it =>
-            // the sort makes DEDUP free: identical pairs are adjacent,
-            // so skipping equal-consecutive rows keeps every round's
-            // working set a SET (multiplicity from duplicate emissions
-            // would otherwise grow additively per round — at 10⁹ edges
-            // that is real shuffle volume). Fixed-point semantics are
-            // unchanged: emissions are a function of the pair SET.
-            var hasPrev = false
-            var pa = 0L
-            var pb = 0L
-            it.flatMap { case (p @ (a, b), _) =>
-              if (hasPrev && a == pa && b == pb) Iterator.empty
-              else { hasPrev = true; pa = a; pb = b; Iterator.single(p) }
-            }
-          }, preservesPartitioning = false)
       }
-
-    /** Walk the sorted runs of one partition: `emit(u, minValue, v)`
-      * per row, where minValue is the run's FIRST (smallest) value.
-      */
-    def runWalk(emit: (Long, Long, Long, Boolean) => Iterator[(Long, Long)])(
-        it: Iterator[(Long, Long)]): Iterator[(Long, Long)] =
-      new Iterator[(Long, Long)] {
-        private var curKey = 0L
-        private var curMin = 0L
-        private var started = false
-        private var pending: Iterator[(Long, Long)] = Iterator.empty
-        private def advance(): Unit =
-          while (!pending.hasNext && it.hasNext) {
-            val (u, v) = it.next()
-            val isFirst = !started || u != curKey
-            if (isFirst) { curKey = u; curMin = v; started = true }
-            pending = emit(u, curMin, v, isFirst)
+      new org.apache.spark.rdd.OrderedRDDFunctions[(Long, Long), Null,
+          ((Long, Long), Null)](keyed)(
+          Ordering.Tuple2[Long, Long], implicitly, implicitly, implicitly)
+        .repartitionAndSortWithinPartitions(byFirst)
+        .mapPartitions({ it =>
+          // the sort makes DEDUP free: identical pairs are adjacent,
+          // so skipping equal-consecutive rows keeps every round's
+          // working set a SET (multiplicity from duplicate emissions
+          // would otherwise grow additively per round — at 10⁹ edges
+          // that is real shuffle volume). Fixed-point semantics are
+          // unchanged: emissions are a function of the pair SET.
+          var hasPrev = false
+          var pa = 0L
+          var pb = 0L
+          it.flatMap { case (p @ (a, b), _) =>
+            if (hasPrev && a == pa && b == pb) Iterator.empty
+            else { hasPrev = true; pa = a; pb = b; Iterator.single(p) }
           }
-        override def hasNext: Boolean = { advance(); pending.hasNext }
-        override def next(): (Long, Long) = { advance(); pending.next() }
-      }
-
-    def starRound(in: RDD[(Long, Long)]): RDD[(Long, Long)] = {
-      val bidir = in.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      // LARGE-STAR: per run u (values ascending), m = min(u, minΓ(u));
-      // every strictly-larger neighbor re-attaches to m
-      val afterLarge = sortedRuns(bidir).mapPartitions(
-        runWalk { (u, minV, v, _) =>
-          val m = math.min(u, minV)
-          if (v > u && v != m) Iterator.single((v, m)) else Iterator.empty
-        })
-      // SMALL-STAR: the run min adopts the node (once per run — the
-      // reduceByKey(min) row of the old spelling) and every smaller
-      // partner (per row, multiplicities preserved; afterLarge rows
-      // all satisfy b < a, so m = first b < a always)
-      sortedRuns(afterLarge).mapPartitions(
-        runWalk { (a, m, b, isFirst) =>
-          val head =
-            if (isFirst) Iterator.single((a, m)) else Iterator.empty
-          if (b != m) head ++ Iterator.single((b, m)) else head
-        })
+        }, preservesPartitioning = false)
     }
 
-    // one partition: the coalesce is narrow, so round 1 reads the
-    // checkpointed pairs in place
-    var cur = if (onePartition) first.coalesce(1) else first
+    def starRound(in: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      sortedRuns(sortedRuns(in.mapPartitions(bidirected))
+        .mapPartitions(largeStar)).mapPartitions(smallStar)
+
+    var cur = first
     var prevPersisted = first // the entry checkpoint; freed after round 1
     var prevChk = 0L
     var prevCnt = -1L
     var converged = false
     var round = 0
-    val maxRounds = 64 // ≫ log₂ of any conceivable node count
-    while (!converged && round < maxRounds) {
+    while (!converged && round < MaxRounds) {
       val stepped = starRound(cur)
       stepped.localCheckpoint() // materialized by the probe below;
       // truncates lineage so round-k task binaries stay O(1), not O(k)
       // order-independent fixed-point probe riding the materializing
       // action (count + wrap-around sum of pair hashes)
-      val (cnt, chk) = stepped.mapPartitions { it =>
-        var c = 0L
-        var s = 0L
-        it.foreach { case (a, b) => c += 1; s += mixPair(a, b) }
-        Iterator.single((c, s))
-      }.fold((0L, 0L)) { case ((c1, s1), (c2, s2)) => (c1 + c2, s1 + s2) }
+      val (cnt, chk) = stepped
+        .mapPartitions(it => Iterator.single(checksum(it)))
+        .fold((0L, 0L)) { case ((c1, s1), (c2, s2)) => (c1 + c2, s1 + s2) }
       converged = cnt == prevCnt && chk == prevChk
       prevCnt = cnt
       prevChk = chk
@@ -304,21 +285,136 @@ object ConnectedComponents {
       round += 1
     }
     if (!converged) throw new IllegalStateException(
-      s"connected components did not converge in $maxRounds rounds")
-    // node → component min: each node's run in the partition it
-    // already sits in, or one reduceByKey over the exchanged rounds
-    val mins =
-      if (onePartition) sortedRuns(cur).mapPartitions(
-        runWalk { (u, m, _, isFirst) =>
-          if (isFirst) Iterator.single((u, m)) else Iterator.empty
-        })
-      else cur.reduceByKey((x: Long, y: Long) => math.min(x, y), parts)
+      s"connected components did not converge in $MaxRounds rounds")
+    roundLog.value.foreach(_ += round)
+    // node → component min
+    val mins = cur.reduceByKey((x: Long, y: Long) => math.min(x, y), parts)
     import spark.implicits._
     val forest = spark.createDataset(mins).toDF("a", "b")
       .localCheckpoint(true) // edge-sized; frees the loop's RDD cache
     prevPersisted.unpersist(false)
     forest
   }
+
+  /** [[bigLoop]]'s route for a graph of at most [[onePartitionBound]]
+    * pairs: one job runs [[contractInTask]] over the checkpointed pairs
+    * coalesced to one partition (narrow: the task reads them in place)
+    * and returns the forest as a local relation.
+    */
+  private def inTaskForest(spark: SparkSession,
+      first: RDD[(Long, Long)]): DataFrame = {
+    import spark.implicits._
+    // an RDD of no partitions (an empty scan) runs no task
+    val (rounds, converged, a, b) =
+      first.coalesce(1).mapPartitions(contractInTask).collect()
+        .headOption.getOrElse(contractInTask(Iterator.empty).next())
+    first.unpersist(false)
+    if (!converged) throw new IllegalStateException(
+      s"connected components did not converge in $MaxRounds rounds")
+    roundLog.value.foreach(_ += rounds)
+    spark.createDataset(a.indices.map(i => (a(i), b(i)))).toDF("a", "b")
+  }
+
+  /** Every round of the contraction and the final min-reduce, inside
+    * one task over all the graph's oriented pairs: the loop state is a
+    * pair of primitive long arrays, and each star phase gets its runs
+    * from [[sortedInTask]]. Returns (rounds, converged, forest a,
+    * forest b); the driver raises the non-convergence.
+    */
+  private def contractInTask(first: Iterator[(Long, Long)])
+      : Iterator[(Int, Boolean, Array[Long], Array[Long])] = {
+    def pairs(ab: (Array[Long], Array[Long])): Iterator[(Long, Long)] =
+      Iterator.range(0, ab._1.length).map(i => (ab._1(i), ab._2(i)))
+    var cur = longArrays(first)
+    var prevChk = 0L
+    var prevCnt = -1L
+    var converged = false
+    var round = 0
+    while (!converged && round < MaxRounds) {
+      val stepped = longArrays(smallStar(sortedInTask(
+        largeStar(sortedInTask(bidirected(pairs(cur)))))))
+      val (cnt, chk) = checksum(pairs(stepped))
+      converged = cnt == prevCnt && chk == prevChk
+      prevCnt = cnt
+      prevChk = chk
+      cur = stepped
+      round += 1
+    }
+    // node → component min: the first row of each node's run
+    val (a, b) = longArrays(runWalk { (u, m, _, isFirst) =>
+        if (isFirst) Iterator.single((u, m)) else Iterator.empty
+      }(sortedInTask(pairs(cur))))
+    Iterator.single((round, converged, a, b))
+  }
+
+  /** The pairs of `it` as two primitive long arrays. */
+  private def longArrays(
+      it: Iterator[(Long, Long)]): (Array[Long], Array[Long]) = {
+    val as = Array.newBuilder[Long]
+    val bs = Array.newBuilder[Long]
+    it.foreach { case (a, b) => as += a; bs += b }
+    (as.result(), bs.result())
+  }
+
+  /** Each pair and its reverse. */
+  private def bidirected(
+      it: Iterator[(Long, Long)]): Iterator[(Long, Long)] =
+    it.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+
+  /** LARGE-STAR over sorted runs: per run u (values ascending),
+    * m = min(u, minΓ(u)); every strictly-larger neighbor re-attaches
+    * to m.
+    */
+  private def largeStar(
+      runs: Iterator[(Long, Long)]): Iterator[(Long, Long)] =
+    runWalk { (u, minV, v, _) =>
+      val m = math.min(u, minV)
+      if (v > u && v != m) Iterator.single((v, m)) else Iterator.empty
+    }(runs)
+
+  /** SMALL-STAR over sorted runs: the run min adopts the node (once per
+    * run — the reduceByKey(min) row of the old spelling) and every
+    * smaller partner (per row, multiplicities preserved; large-star
+    * rows all satisfy b < a, so m = first b < a always).
+    */
+  private def smallStar(
+      runs: Iterator[(Long, Long)]): Iterator[(Long, Long)] =
+    runWalk { (a, m, b, isFirst) =>
+      val head = if (isFirst) Iterator.single((a, m)) else Iterator.empty
+      if (b != m) head ++ Iterator.single((b, m)) else head
+    }(runs)
+
+  /** (count, wrap-around sum of pair hashes) — the order-independent
+    * fixed-point probe over a pair multiset.
+    */
+  private def checksum(it: Iterator[(Long, Long)]): (Long, Long) = {
+    var c = 0L
+    var s = 0L
+    it.foreach { case (a, b) => c += 1; s += mixPair(a, b) }
+    (c, s)
+  }
+
+  /** Walk the sorted runs of one partition: `emit(u, minValue, v)`
+    * per row, where minValue is the run's FIRST (smallest) value.
+    */
+  private def runWalk(
+      emit: (Long, Long, Long, Boolean) => Iterator[(Long, Long)])(
+      it: Iterator[(Long, Long)]): Iterator[(Long, Long)] =
+    new Iterator[(Long, Long)] {
+      private var curKey = 0L
+      private var curMin = 0L
+      private var started = false
+      private var pending: Iterator[(Long, Long)] = Iterator.empty
+      private def advance(): Unit =
+        while (!pending.hasNext && it.hasNext) {
+          val (u, v) = it.next()
+          val isFirst = !started || u != curKey
+          if (isFirst) { curKey = u; curMin = v; started = true }
+          pending = emit(u, curMin, v, isFirst)
+        }
+      override def hasNext: Boolean = { advance(); pending.hasNext }
+      override def next(): (Long, Long) = { advance(); pending.next() }
+    }
 
   /** One partition's pairs sorted ascending by (a, b) with equal pairs
     * dropped — the run order [[bigLoop]]'s sorted shuffle delivers,
@@ -331,10 +427,7 @@ object ConnectedComponents {
     */
   private def sortedInTask(
       it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
-    val as = Array.newBuilder[Long]
-    val bs = Array.newBuilder[Long]
-    it.foreach { case (a, b) => as += a; bs += b }
-    val (a, b) = (as.result(), bs.result())
+    val (a, b) = longArrays(it)
     val n = a.length
     val vals = java.util.Arrays.copyOf(a, 2 * n)
     System.arraycopy(b, 0, vals, n, n)
@@ -427,30 +520,33 @@ object ConnectedComponents {
   val LocalEdgeBound: Long = 1000000L
 
   /** (node, component) for every node that appears in `edges` (columns
-    * a, b), gated on the edge count: the edges are cast to long and
-    * checkpointed eagerly, and a list of at most `localEdgeBound`
-    * pairs finishes as a driver union-find in one collect — each
-    * distributed round costs a scheduler round-trip that a single
-    * union-find beats by orders of magnitude on such a graph — while a
-    * larger one runs the contraction ([[components]]). Both routes
+    * a, b), gated on the edge count: the edges are cast to a long pair
+    * RDD, checkpointed and counted in one job, and a list of at most
+    * `localEdgeBound` pairs finishes as a driver union-find in one
+    * collect of the checkpoint — each distributed round costs a
+    * scheduler round-trip that a single union-find beats by orders of
+    * magnitude on such a graph — while a larger one runs the
+    * contraction ([[components]]) over the checkpoint. Both routes
     * emit the same labels; 0 forces the contraction.
     */
   private[graft] def resolve(edges: DataFrame,
       localEdgeBound: Long): DataFrame = {
-    val e = edges.select(col("a").cast("long").as("a"),
-        col("b").cast("long").as("b"))
-      .localCheckpoint(true) // read by the size gate AND the resolve
-    if (e.count() <= localEdgeBound) localComponents(e) else components(e)
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val e = edges.select(col("a").cast("long"), col("b").cast("long"))
+      .rdd.map(r => (r.getLong(0), r.getLong(1)))
+    e.localCheckpoint() // read by the size gate AND the resolve
+    if (e.count() <= localEdgeBound) localComponents(spark, e.collect())
+    else components(spark.createDataset(e).toDF("a", "b"))
   }
 
   /** Driver union-find over a collected edge list of longs — the
     * small-graph route of [[resolve]] (same contract as
     * [[components]]).
     */
-  private def localComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
+  private def localComponents(spark: SparkSession,
+      es: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x
@@ -484,19 +580,25 @@ object ConnectedComponents {
       chainLen: Long = 1000L): DataFrame = {
     val c = Tables.load(spark, sfDir, "customer")
       .select(col("c_custkey").as("k"))
-    val next = c.select(col("k").as("a"), (col("k") + 1L).as("b"))
-    val skip = c.select(col("k").as("a"), (col("k") + 2L).as("b"))
-    val present = c.select(col("k").as("b"))
-    // keep edges whose far endpoint exists and stays in the chain —
-    // integer DIV (double division can misfloor at 10^12-scale keys);
-    // custkeys are 0-based in the fixtures, so blocks are k DIV len
-    val edges = next.unionAll(skip)
-      .join(present, Seq("b"), "left_semi")
-      .filter(expr(s"a DIV $chainLen = b DIV $chainLen"))
     // a customer alone in its block (count ≡ 1 mod chainLen) is in no
     // edge — label the full key set so every node reports, matching
     // the oracle
-    withSizes(keyComponents(c.select(col("k").as("node")), edges))
+    withSizes(keyComponents(c.select(col("k").as("node")),
+      chainEdges(c, chainLen)))
+  }
+
+  /** q155's edges over the keys `c`: each key to its successor and to
+    * the key after that, kept when the far endpoint exists and stays
+    * in the key's block of `chainLen` — integer DIV (double division
+    * can misfloor at 10^12-scale keys); custkeys are 0-based in the
+    * fixtures, so blocks are k DIV len.
+    */
+  private[graft] def chainEdges(c: DataFrame, chainLen: Long): DataFrame = {
+    val next = c.select(col("k").as("a"), (col("k") + 1L).as("b"))
+    val skip = c.select(col("k").as("a"), (col("k") + 2L).as("b"))
+    next.unionAll(skip)
+      .join(c.select(col("k").as("b")), Seq("b"), "left_semi")
+      .filter(expr(s"a DIV $chainLen = b DIV $chainLen"))
   }
 
   /** q162: components of a HUB-STAR graph over the dense customer-key

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.operators.{ConnectedComponents, Dedup}
 
 class ConnectedComponentsSpec extends SparkSpec {
@@ -38,9 +40,38 @@ class ConnectedComponentsSpec extends SparkSpec {
     onePartition
   }
 
-  private def run(es: Seq[(Long, Long)]): Map[Long, Long] = onBothRoutes(
-    ConnectedComponents.components(es.toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+  /** The star forest of `edges` with the loop's reported round count,
+    * on the in-task route (forced at any size) and on the exchanged one
+    * (bound 0): forest, rounds and schema, nullability included, must
+    * agree. Returns the forest and the round count.
+    */
+  private def forestOnBothRoutes(edges: DataFrame): (Set[(Long, Long)], Int) = {
+    def once() = {
+      val (f, rounds) = ConnectedComponents.countingRounds(
+        ConnectedComponents.forest(edges))
+      (f.collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
+        rounds, f.schema)
+    }
+    val inTask =
+      ConnectedComponents.onePartitionBound.withValue(Long.MaxValue)(once())
+    val exchanged = ConnectedComponents.onePartitionBound.withValue(0L)(once())
+    assert(inTask._1 == exchanged._1, "the routes' forests differ")
+    assert(inTask._2 == exchanged._2, "the routes' round counts differ")
+    assert(inTask._2.size == 1, s"${inTask._2.size} loops ran")
+    assert(inTask._3 == exchanged._3, s"${inTask._3} vs ${exchanged._3}")
+    assert(inTask._3 == StructType(Seq(StructField("a", LongType, false),
+      StructField("b", LongType, false))), inTask._3.treeString)
+    (inTask._1, inTask._2.head)
+  }
+
+  private def run(es: Seq[(Long, Long)]): Map[Long, Long] = {
+    val labels = onBothRoutes(
+      ConnectedComponents.components(es.toDF("a", "b"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val (forest, _) = forestOnBothRoutes(es.toDF("a", "b"))
+    assert(forest == labels.filter { case (n, c) => n != c }.toSet)
+    labels
+  }
 
   test("components: random graphs match a union-find replica") {
     // deterministic pseudo-random edges over several densities
@@ -205,15 +236,15 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
-  test("resolveClusters: the local route runs 4 jobs, its result's collect none") {
-    // the eager checkpoint, the size gate's count (two jobs) and the
-    // union-find's collect; the relabelled result is a local relation,
-    // so its collect starts none
+  test("resolveClusters: the local route runs 2 jobs, its result's collect none") {
+    // one job checkpoints the pairs and counts them for the size gate,
+    // one collects the checkpoint for the union-find; the relabelled
+    // result is a local relation, so its collect starts none
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("ai", "bi")
     Dedup.resolveClusters(pairs).collect() // warm
     val (rows, jobs) = recordJobs(Dedup.resolveClusters(pairs).collect())
     assert(rows.length == 5)
-    assert(jobs.sites.size == 4, jobs.sites.mkString("\n"))
+    assert(jobs.sites.size == 2, jobs.sites.mkString("\n"))
   }
 
   test("q155: chain components match the analytic blocks") {
@@ -228,6 +259,13 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
     // every customer key present exactly once
     assert(rows.map(_._1).distinct.length == rows.length)
+    // its forest: the same pairs, rounds and schema on both routes
+    val c = graft.sources.Tables.load(spark, sf, "customer")
+      .select(col("c_custkey").as("k"))
+    val (forest, _) =
+      forestOnBothRoutes(ConnectedComponents.chainEdges(c, 40L))
+    assert(forest == rows.collect { case (n, comp, _) if n != comp =>
+      (n, comp) }.toSet)
   }
 
   test("q162: hub-star components match the analytic blocks") {
@@ -251,19 +289,22 @@ class ConnectedComponentsSpec extends SparkSpec {
       yield (h * 1000L, h * 1000L + j)
     val extra = stars :+ ((1000000L, 1000001L))
     assert(stars.size == 65536)
-    for ((es, shuffles) <- Seq(stars -> false, extra -> true)) {
+    for ((es, inTask) <- Seq(stars -> true, extra -> false)) {
       val edges = es.toDF("a", "b")
-      val (f, rec) = recordJobs(ConnectedComponents.forest(edges))
-      assert(rec.sites.count(_.startsWith("fold at ConnectedComponents")) == 2,
-        rec.sites.mkString("\n"))
-      assert((rec.shuffleBytes > 0L) == shuffles,
+      val ((f, rounds), rec) = recordJobs(
+        ConnectedComponents.countingRounds(ConnectedComponents.forest(edges)))
+      assert(rounds === Seq(2), rec.sites.mkString("\n"))
+      // in one task: the checkpoint's count and the loop, no shuffle
+      assert((rec.shuffleBytes == 0L) == inTask,
         s"${es.size} pairs shuffled ${rec.shuffleBytes} B")
+      if (inTask) assert(rec.sites.size == 2, rec.sites.mkString("\n"))
       val forest = f.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val labels = ConnectedComponents.components(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val want = replica(es)
       assert(labels == want, s"${es.size} pairs")
       assert(forest == want.filter { case (n, c) => n != c })
+      assert(forestOnBothRoutes(edges) == ((forest.toSet, 2)))
     }
   }
 }

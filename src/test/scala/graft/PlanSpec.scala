@@ -696,28 +696,38 @@ class PlanSpec extends SparkSpec {
   private def curationJobs(name: String): Seq[String] =
     curationRun(name).sites
 
-  private def curationRun(name: String): JobRecord = {
+  private def curationRun(name: String): JobRecord =
+    curationRounds(name)._1
+
+  /** [[curationRun]] with the round count of each contraction loop the
+    * measured run reported.
+    */
+  private def curationRounds(name: String): (JobRecord, Seq[Int]) = {
     def once(): Unit = SparkEntry.queries(name)(spark, sf)
       .write.format("noop").mode("overwrite").save()
     once()
-    recordJobs(once())._2
+    val ((_, rounds), rec) = recordJobs(
+      graft.operators.ConnectedComponents.countingRounds(once()))
+    (rec, rounds)
   }
 
-  /** One fold job per contraction round. */
-  private def rounds(rec: JobRecord): Int =
-    rec.sites.count(_.startsWith("fold at ConnectedComponents"))
-
   test("q155: job budget, with the contraction's round count unchanged") {
-    val rec = curationRun("q155_connected_components")
+    val (rec, rounds) = curationRounds("q155_connected_components")
     val sites = rec.sites
     // a 150-node chain with skip-2 shortcuts needs 8 double rounds (7
-    // to contract, 1 to confirm)
-    assert(rounds(rec) === 8, s"round count moved:\n${sites.mkString("\n")}")
-    assert(sites.size <= 18,
+    // to contract, 1 to confirm), all inside the loop's one job
+    assert(rounds.sum === 8, s"round count moved: $rounds")
+    // 18 when each round was a job of its own
+    assert(sites.size <= 8,
       s"q155 ran ${sites.size} jobs:\n${sites.mkString("\n")}")
-    // 35 when every star phase shuffled into its one partition: a
-    // round was three stages, now one
-    assert(rec.stages <= 18, s"q155 ran ${rec.stages} stages")
+    assert(rec.stages <= 8, s"q155 ran ${rec.stages} stages")
+    // 6,389 B when the labeling join shuffled both sides
+    assert(rec.shuffleBytes <= 3305L,
+      s"q155 wrote ${rec.shuffleBytes} shuffle bytes")
+    // the forest is a local relation, so the labeling join broadcasts it
+    val plan = planOf(SparkEntry.queries("q155_connected_components")(spark, sf))
+    assert(plan.contains("BroadcastHashJoin") && plan.contains("LocalTableScan")
+      && !plan.contains("SortMergeJoin"), s"forest not broadcast:\n$plan")
   }
 
   test("q162/q157: their forests contract in two rounds with no shuffle") {
@@ -725,13 +735,16 @@ class PlanSpec extends SparkSpec {
     val c = graft.sources.Tables.load(spark, sf, "customer")
       .select(org.apache.spark.sql.functions.col("c_custkey").as("k"))
     // q162's hub stars and q157's half-block base graph are star forests
-    // already: one round to contract, one to confirm
+    // already: one round to contract, one to confirm, in the loop's one
+    // job after the pairs' checkpoint and count
     for ((name, edges) <- Seq(
         "q162" -> ConnectedComponents.starEdges(c, 400L),
         "q157" -> ConnectedComponents.halfBlockEdges(c, 600L))) {
       ConnectedComponents.forest(edges) // warm
-      val (_, rec) = recordJobs(ConnectedComponents.forest(edges))
-      assert(rounds(rec) === 2, s"$name:\n${rec.sites.mkString("\n")}")
+      val ((_, rounds), rec) = recordJobs(
+        ConnectedComponents.countingRounds(ConnectedComponents.forest(edges)))
+      assert(rounds.sum === 2, s"$name: $rounds")
+      assert(rec.sites.size === 2, s"$name:\n${rec.sites.mkString("\n")}")
       assert(rec.shuffleBytes === 0L, s"$name shuffled")
     }
   }
