@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import graft.functions.SimHashFunctions.simhash64
@@ -426,7 +427,7 @@ object Dedup {
     *
     * '''Driver route''' — one job, no exchange: each task counts its
     * partition's hashes into a primitive long → long map, reading
-    * `InternalRow`s, and returns the map as two arrays — or an
+    * `InternalRow`s, and returns the map as two compressed arrays — or an
     * overflow marker once it holds more than its share (threshold /
     * 16 B / partitions) of entries. With no overflow the driver merges
     * the partials, so the table holds at most threshold / 16 B
@@ -458,7 +459,10 @@ object Dedup {
   }
 
   /** [[docFrequencies]]' driver route: (h, df) arrays sorted by h, or
-    * None when a task passed its share of `maxEntries`.
+    * None when a task passed its share of `maxEntries`. Each task
+    * sends its sorted entries through the session's block codec, the
+    * hashes as gaps from their predecessor (mostly zero high bytes)
+    * and the counts after them (mostly 1).
     */
   private def countOnDriver(docs: DataFrame,
       maxEntries: Long): Option[(Array[Long], Array[Long])] = {
@@ -476,13 +480,26 @@ object Dedup {
           }
         }
       }
-      Iterator.single(Option.when(counts.size <= share)(counts.sorted))
+      Iterator.single(Option.when(counts.size <= share) {
+        val (hs, dfs) = counts.sorted
+        GraftColumnBridge.compress { out =>
+          out.writeInt(hs.length)
+          var prev = 0L
+          hs.foreach { h => out.writeLong(h - prev); prev = h }
+          dfs.foreach(out.writeLong)
+        }
+      })
     }.collect()
     if (partials.contains(None)) None
     else {
       val merged = new LongCounts
-      partials.flatten.foreach { case (hs, dfs) =>
-        hs.indices.foreach(i => merged.add(hs(i), dfs(i)))
+      partials.flatten.foreach { bytes =>
+        GraftColumnBridge.decompress(bytes) { in =>
+          val hs = new Array[Long](in.readInt())
+          var prev = 0L
+          hs.indices.foreach { i => prev += in.readLong(); hs(i) = prev }
+          hs.foreach(h => merged.add(h, in.readLong()))
+        }
       }
       Some(merged.sorted)
     }

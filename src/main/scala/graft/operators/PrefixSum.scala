@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * so −1 turns the route off, exactly as it does broadcast joins):
   *
   *  1. one job: each task reads its `(key, value)` pairs into two
-  *     primitive arrays and sends them to the driver;
+  *     primitive arrays and sends them to the driver through the
+  *     session's block codec (`GraftColumnBridge.compress`);
   *  2. the driver sorts the keys (`java.util.Arrays.sort`, no boxing),
   *     places each value at its key's slot and, in one linear pass,
   *     prefix-scans them into cums and sums the shard totals (truncating
@@ -104,9 +105,10 @@ object PrefixSum {
 
   /** What one broadcast-route task sends the driver. */
   private sealed trait Partial
-  /** The task's pairs, in the order it read them. */
-  private final case class Pairs(keys: Array[Long], vals: Array[Long])
-      extends Partial
+  /** The task's pairs, in the order it read them: their count, the
+    * keys, then the values, compressed.
+    */
+  private final case class Pairs(bytes: Array[Byte]) extends Partial
   /** The task passed its share of the pair bound. */
   private case object Overflow extends Partial
   /** The task read a null key. */
@@ -139,20 +141,31 @@ object PrefixSum {
       Iterator.single[Partial](
         if (nullSeen) NullKey
         else if (n > share) Overflow
-        else Pairs(java.util.Arrays.copyOf(ks, n),
-          java.util.Arrays.copyOf(vs, n)))
+        else Pairs(GraftColumnBridge.compress { out =>
+          out.writeInt(n)
+          (0 until n).foreach(i => out.writeLong(ks(i)))
+          (0 until n).foreach(i => out.writeLong(vs(i)))
+        }))
     }.collect()
     if (partials.contains(NullKey)) throw nullKey(orderCol)
     if (partials.contains(Overflow)) return None
-    val runs = partials.collect { case p: Pairs => p }
-    val keys = Array.concat(runs.map(_.keys).toSeq: _*)
+    val runs = partials.collect { case Pairs(bytes) =>
+      GraftColumnBridge.decompress(bytes) { in =>
+        val n = in.readInt()
+        val (ks, vs) = (new Array[Long](n), new Array[Long](n))
+        ks.indices.foreach(i => ks(i) = in.readLong())
+        vs.indices.foreach(i => vs(i) = in.readLong())
+        (ks, vs)
+      }
+    }
+    val keys = Array.concat(runs.map(_._1).toSeq: _*)
     java.util.Arrays.sort(keys)
     if ((1 until keys.length).exists(i => keys(i) == keys(i - 1))) return None
     // the keys are unique: each pair's value goes to its key's slot
     val vals = new Array[Long](keys.length)
-    runs.foreach { r =>
-      r.keys.indices.foreach { j =>
-        vals(java.util.Arrays.binarySearch(keys, r.keys(j))) = r.vals(j)
+    runs.foreach { case (ks, vs) =>
+      ks.indices.foreach { j =>
+        vals(java.util.Arrays.binarySearch(keys, ks(j))) = vs(j)
       }
     }
     // one pass: cums and shard totals — truncating `div` is monotone,

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.datasketches.hll.{HllSketch => DataSketchesHll, TgtHllType}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
@@ -20,9 +20,10 @@ import graft.sources.Tables
   * estimate.
   *
   * Spark's `HllSketchAgg` is bound to the selected columns'
-  * `InternalRow`s; each task builds one sketch per column and sends it
-  * as a compact HLL_4 sketch (the same register values as the
-  * aggregate's HLL_8 buffer, in fewer bytes). A
+  * `InternalRow`s; each task builds one sketch per column and sends
+  * them as compact HLL_4 sketches (the same register values as the
+  * aggregate's HLL_8 buffer, in fewer bytes), written through the
+  * session's block codec (`GraftColumnBridge.compress`). A
   * `treeAggregate` unions the partials: up to 5 partitions that is the
   * result stage's fold on the driver, with no exchange; past that it
   * adds a level of unions on the executors, so the driver receives
@@ -41,22 +42,37 @@ object CardinalityEstimator {
       HllFunctions.sketchAgg(BoundReference(i, f.dataType, f.nullable),
         HllFunctions.DefaultPrecision)
     }
-    val empty = aggs.map(a => compact(a.createAggregationBuffer()))
-    val union = (a: Array[Array[Byte]], b: Array[Array[Byte]]) =>
-      aggs.indices.map { i =>
-        compact(aggs(i).merge(DataSketchesHll.heapify(a(i)),
-          DataSketchesHll.heapify(b(i))))
-      }.toArray
-    val sketches = selected.queryExecution.toRdd.mapPartitions { rows =>
-      val buffers = aggs.map(_.createAggregationBuffer())
-      rows.foreach { row =>
-        var i = 0
-        while (i < aggs.length) {
-          buffers(i) = aggs(i).update(buffers(i), row); i += 1
+    val pack = (sketches: Array[DataSketchesHll]) =>
+      GraftColumnBridge.compress { out =>
+        sketches.foreach { s =>
+          val b = compact(s); out.writeInt(b.length); out.write(b)
         }
       }
-      Iterator.single(buffers.map(compact))
-    }.treeAggregate(empty)(union, union)
+    val unpack = (bytes: Array[Byte]) =>
+      GraftColumnBridge.decompress(bytes) { in =>
+        Array.fill(aggs.length) {
+          val b = new Array[Byte](in.readInt()); in.readFully(b); b
+        }
+      }
+    val empty = pack(aggs.map(_.createAggregationBuffer()))
+    val union = (a: Array[Byte], b: Array[Byte]) => {
+      val (x, y) = (unpack(a), unpack(b))
+      pack(aggs.indices.map { i =>
+        aggs(i).merge(DataSketchesHll.heapify(x(i)),
+          DataSketchesHll.heapify(y(i)))
+      }.toArray)
+    }
+    val sketches = unpack(selected.queryExecution.toRdd.mapPartitions {
+      rows =>
+        val buffers = aggs.map(_.createAggregationBuffer())
+        rows.foreach { row =>
+          var i = 0
+          while (i < aggs.length) {
+            buffers(i) = aggs(i).update(buffers(i), row); i += 1
+          }
+        }
+        Iterator.single(pack(buffers))
+    }.treeAggregate(empty)(union, union))
     cols.zip(sketches.map { s =>
       HllFunctions.canonicalEstimate(Literal(s, BinaryType)).eval()
         .asInstanceOf[Long]

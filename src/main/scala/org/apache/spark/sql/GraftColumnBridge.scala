@@ -1,5 +1,10 @@
 package org.apache.spark.sql
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream,
+  DataInputStream, DataOutputStream}
+
+import org.apache.spark.SparkEnv
+import org.apache.spark.io.CompressionCodec
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.CatalogStatistics
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -67,4 +72,27 @@ object GraftColumnBridge {
         if a.nameParts.length == 1 => Some(a.nameParts.head)
     case _ => None
   }
+
+  /** What `write` writes, through the block codec of the running
+    * SparkEnv (`spark.io.compression.codec`: zstd under
+    * [[graft.GraftSession]]) — the encoding of every partial a task
+    * sends the driver, so task results travel in the same codec as
+    * shuffle and broadcast blocks. Works on the driver and in tasks.
+    */
+  def compress(write: DataOutputStream => Unit): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream()
+    val out = new DataOutputStream(codec.compressedOutputStream(bytes))
+    try write(out) finally out.close()
+    bytes.toByteArray
+  }
+
+  /** Read back what [[compress]] wrote. */
+  def decompress[T](bytes: Array[Byte])(read: DataInputStream => T): T = {
+    val in = new DataInputStream(
+      codec.compressedInputStream(new ByteArrayInputStream(bytes)))
+    try read(in) finally in.close()
+  }
+
+  private def codec: CompressionCodec =
+    CompressionCodec.createCodec(SparkEnv.get.conf)
 }

@@ -307,6 +307,10 @@ class AdvisorSpec extends SparkSpec {
     }
     val expected = workload(spark.read.parquet(liPath),
       spark.read.parquet(ordPath)).collect().toSeq
+    // flush the pre-install executions' end events: a straggler
+    // landing after install would add an unlabeled line to the trace
+    org.apache.spark.sql.GraftColumnBridge
+      .drainListenerBus(spark, 10000L)
     val listener = TraceCapture.install(spark, tracePath)
     // AQE can plan this small join as broadcast — force the shuffle
     // shape the nomination exists for (at 100 TB neither side
@@ -423,6 +427,10 @@ class AdvisorSpec extends SparkSpec {
     }
     val expected = workload(srcPath).map(_().collect().toSeq)
     val (preFiles, preBytes) = scanStats(workload(srcPath).head())
+    // flush the pre-install executions' end events: a straggler
+    // landing after install would add an unlabeled line to the trace
+    org.apache.spark.sql.GraftColumnBridge
+      .drainListenerBus(spark, 10000L)
     val listener = TraceCapture.install(spark, tracePath)
     try {
       workload(srcPath).zipWithIndex.foreach { case (q, i) =>
