@@ -460,9 +460,8 @@ object Dedup {
 
   /** [[docFrequencies]]' driver route: (h, df) arrays sorted by h, or
     * None when a task passed its share of `maxEntries`. Each task
-    * sends its sorted entries through the session's block codec, the
-    * hashes as gaps from their predecessor (mostly zero high bytes)
-    * and the counts after them (mostly 1).
+    * sends its sorted entries through the session's block codec: their
+    * count, the hashes, then the counts (mostly 1).
     */
   private def countOnDriver(docs: DataFrame,
       maxEntries: Long): Option[(Array[Long], Array[Long])] = {
@@ -484,8 +483,7 @@ object Dedup {
         val (hs, dfs) = counts.sorted
         GraftColumnBridge.compress { out =>
           out.writeInt(hs.length)
-          var prev = 0L
-          hs.foreach { h => out.writeLong(h - prev); prev = h }
+          hs.foreach(out.writeLong)
           dfs.foreach(out.writeLong)
         }
       })
@@ -495,9 +493,7 @@ object Dedup {
       val merged = new LongCounts
       partials.flatten.foreach { bytes =>
         GraftColumnBridge.decompress(bytes) { in =>
-          val hs = new Array[Long](in.readInt())
-          var prev = 0L
-          hs.indices.foreach { i => prev += in.readLong(); hs(i) = prev }
+          val hs = Array.fill(in.readInt())(in.readLong())
           hs.foreach(h => merged.add(h, in.readLong()))
         }
       }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.datasketches.hll.{HllSketch => DataSketchesHll, TgtHllType}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
 import org.apache.spark.sql.functions._
@@ -20,20 +21,26 @@ import graft.sources.Tables
   * estimate.
   *
   * Spark's `HllSketchAgg` is bound to the selected columns'
-  * `InternalRow`s; each task builds one sketch per column and sends
-  * them as compact HLL_4 sketches (the same register values as the
-  * aggregate's HLL_8 buffer, in fewer bytes), written through the
-  * session's block codec (`GraftColumnBridge.compress`). A
-  * `treeAggregate` unions the partials: up to 5 partitions that is the
-  * result stage's fold on the driver, with no exchange; past that it
-  * adds a level of unions on the executors, so the driver receives
-  * about √partitions sketches. Each column is finalized on the driver
-  * as the canonical `hll_distinct` estimate,
-  * `hll_sketch_estimate(hll_union(s, s))`.
+  * `InternalRow`s; each task builds one sketch per column as a
+  * compact HLL_4 sketch (the same register values as the aggregate's
+  * HLL_8 buffer, in fewer bytes). Up to 5 partitions each task sends
+  * its sketches to the driver, which unions them, with no exchange;
+  * past that one level of unions on the executors (an exchange of
+  * √partitions partitions) runs first, so the driver receives about
+  * √partitions partials. A task writes what it sends the driver once,
+  * through the session's block codec (`GraftColumnBridge.compress`).
+  * Each column is finalized on the driver as the canonical
+  * `hll_distinct` estimate, `hll_sketch_estimate(hll_union(s, s))`.
   */
 object CardinalityEstimator {
 
   val BucketMultiplier = 5 // trainer.py:264
+
+  /** Up to this many partitions [[vocabSizes]] unions every task's
+    * sketches on the driver; past it, a level of unions on the
+    * executors comes first.
+    */
+  private val DriverUnionPartials = 5
 
   /** Approximate NDV for each named column, in one job. */
   def vocabSizes(df: DataFrame, cols: Seq[String]): Map[String, Long] = {
@@ -42,11 +49,19 @@ object CardinalityEstimator {
       HllFunctions.sketchAgg(BoundReference(i, f.dataType, f.nullable),
         HllFunctions.DefaultPrecision)
     }
-    val pack = (sketches: Array[DataSketchesHll]) =>
-      GraftColumnBridge.compress { out =>
-        sketches.foreach { s =>
-          val b = compact(s); out.writeInt(b.length); out.write(b)
+    // the columns' compact sketches, unioned with `parts`
+    val union = (parts: Iterator[Array[Array[Byte]]]) => {
+      val acc = aggs.map(_.createAggregationBuffer())
+      parts.foreach { p =>
+        aggs.indices.foreach { i =>
+          acc(i) = aggs(i).merge(acc(i), DataSketchesHll.heapify(p(i)))
         }
+      }
+      acc.map(compact)
+    }
+    val pack = (sketches: Array[Array[Byte]]) =>
+      GraftColumnBridge.compress { out =>
+        sketches.foreach { b => out.writeInt(b.length); out.write(b) }
       }
     val unpack = (bytes: Array[Byte]) =>
       GraftColumnBridge.decompress(bytes) { in =>
@@ -54,25 +69,29 @@ object CardinalityEstimator {
           val b = new Array[Byte](in.readInt()); in.readFully(b); b
         }
       }
-    val empty = pack(aggs.map(_.createAggregationBuffer()))
-    val union = (a: Array[Byte], b: Array[Byte]) => {
-      val (x, y) = (unpack(a), unpack(b))
-      pack(aggs.indices.map { i =>
-        aggs(i).merge(DataSketchesHll.heapify(x(i)),
-          DataSketchesHll.heapify(y(i)))
-      }.toArray)
-    }
-    val sketches = unpack(selected.queryExecution.toRdd.mapPartitions {
-      rows =>
-        val buffers = aggs.map(_.createAggregationBuffer())
-        rows.foreach { row =>
-          var i = 0
-          while (i < aggs.length) {
-            buffers(i) = aggs(i).update(buffers(i), row); i += 1
-          }
+    val partials = selected.queryExecution.toRdd.mapPartitions { rows =>
+      val buffers = aggs.map(_.createAggregationBuffer())
+      rows.foreach { row =>
+        var i = 0
+        while (i < aggs.length) {
+          buffers(i) = aggs(i).update(buffers(i), row); i += 1
         }
-        Iterator.single(pack(buffers))
-    }.treeAggregate(empty)(union, union))
+      }
+      Iterator.single(buffers.map(compact))
+    }
+    val n = partials.getNumPartitions
+    val shipped =
+      if (n <= DriverUnionPartials) partials.map(pack)
+      else {
+        // one level of unions on the executors, as `treeAggregate`
+        // adds: the exchange moves plain sketches, which the shuffle
+        // codec compresses
+        val k = math.ceil(math.sqrt(n)).toInt
+        partials.mapPartitionsWithIndex((i, ps) => ps.map(i % k -> _))
+          .partitionBy(new HashPartitioner(k)).values
+          .mapPartitions(ps => Iterator.single(pack(union(ps))))
+      }
+    val sketches = union(shipped.collect().iterator.map(unpack))
     cols.zip(sketches.map { s =>
       HllFunctions.canonicalEstimate(Literal(s, BinaryType)).eval()
         .asInstanceOf[Long]
