@@ -49,7 +49,7 @@ object CardinalityEstimator {
       HllFunctions.sketchAgg(BoundReference(i, f.dataType, f.nullable),
         HllFunctions.DefaultPrecision)
     }
-    // the columns' compact sketches, unioned with `parts`
+    // the union of `parts`, each one compact sketch per column
     val union = (parts: Iterator[Array[Array[Byte]]]) => {
       val acc = aggs.map(_.createAggregationBuffer())
       parts.foreach { p =>
